@@ -671,8 +671,9 @@ def incremental_near_dup_edges(index_sigs: DataFrame, new_images: DataFrame,
     dedicated exact path.
 
     Callers append ``sigs_new`` to the signature stage afterwards so the
-    index stays current (StageStore/foreachBatch; see streaming/ingest.py
-    for the exact-engine analogue). ``sigs_new`` is
+    index stays current (DedupPipeline.run_incremental, which
+    streaming/ingest.py's stream_pipeline_appends drives per micro-batch).
+    ``sigs_new`` is
     (rep_id, shingles, bands, caption) — caption included so stage appends
     need no second collapse join.
 

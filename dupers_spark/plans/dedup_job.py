@@ -28,7 +28,6 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, functions as F
 
 from dupers_spark.operators import exact, minhash_lsh as ml, simhash as sh
-from dupers_spark.operators.components import connected_components, with_singletons
 
 
 def dedup_edges_concurrent(
@@ -79,19 +78,3 @@ def dedup_edges_concurrent(
     for e in frames[1:]:
         edges = edges.unionByName(e)
     return edges
-
-
-def dedup_cluster_assign(
-    images: DataFrame,
-    lsh_cfg: ml.LSHConfig | None = None,
-    phash_radius: int = 3,
-    recompute_phash: bool = False,
-    singletons: bool = True,
-) -> DataFrame:
-    """Full in-memory dedup: concurrent edges → connected components
-    (→ + self-labeled singletons). Returns (image_id, component_id)."""
-    edges = dedup_edges_concurrent(images, lsh_cfg, phash_radius, recompute_phash)
-    assign = connected_components(edges)
-    if singletons:
-        assign = with_singletons(assign, images.select("image_id"))
-    return assign

@@ -324,8 +324,7 @@ def _maintain_locked(spark, warehouse, file_factor, sa_factor,
     has_log = store.exists("components_relabel")
     if store.exists("components") and (has_delta or has_log):
         base = store.read("components")
-        cols = ["image_id", "component_id"] + \
-            (["cb"] if "cb" in base.columns else [])
+        cols = ["image_id", "component_id", "cb"]
         eff = base.select(*cols)
         n_delta = 0
         if has_delta:
@@ -342,21 +341,18 @@ def _maintain_locked(spark, warehouse, file_factor, sa_factor,
         # anyway, so re-deriving the partition count from the grown corpus
         # here is free — a warehouse built at the 64 floor scales its
         # layout the first maintenance pass after it outgrows it
-        cb_before = cb_after = cb_modulus(base) if "cb" in cols else None
-        if "cb" in cols:
-            n_total = eff.count()
-            cb_after = derive_cb_partitions(n_total, floor=CB_PARTITIONS)
-            if cb_after != cb_before:
-                eff = with_cb(eff.drop("cb"), cb_after)
-            eff = eff.repartition("cb")  # ≈1 file per cb partition
+        cb_before = cb_modulus(base)
+        cb_after = derive_cb_partitions(eff.count(), floor=CB_PARTITIONS)
+        if cb_after != cb_before:
+            eff = with_cb(eff.drop("cb"), cb_after)
+        eff = eff.repartition("cb")  # ≈1 file per cb partition
         # the stage marker (resume identity) lives inside the stage dir in
         # parquet mode — preserve it across the rewrite like compact_stage
         # preserves sidecars
         marker_path = os.path.join(warehouse, "components", "_CONFIG_HASH")
         marker = (open(marker_path).read()
                   if os.path.exists(marker_path) else None)
-        store.write("components", eff,
-                    partition_by=(["cb"] if "cb" in cols else None))
+        store.write("components", eff, partition_by=["cb"])
         if marker is not None:
             with open(marker_path, "w") as fh:
                 fh.write(marker)
@@ -368,8 +364,7 @@ def _maintain_locked(spark, warehouse, file_factor, sa_factor,
     for name in sorted(os.listdir(warehouse)):
         path = os.path.join(warehouse, name)
         if (not os.path.isdir(path) or name.startswith("_")
-                or name.endswith((".old", ".staging", ".compact",
-                                  ".backfill"))):
+                or name.endswith((".old", ".staging", ".compact"))):
             continue
         n_files, n_parts = _stage_file_stats(path)
         if n_files == 0:
@@ -479,10 +474,8 @@ class DedupPipeline:
         """The served assignment: base ∪ delta with the relabel log applied
         — one broadcast map over the scan, zero corpus shuffles, and the
         corpus-sized base stage is never rewritten by appends."""
-        base = self._read_stage("components")
-        cols = ["image_id", "component_id"] + \
-            (["cb"] if "cb" in base.columns else [])
-        eff = base.select(*cols)
+        cols = ["image_id", "component_id", "cb"]
+        eff = self._read_stage("components").select(*cols)
         if self.store.exists("components_delta"):
             eff = eff.unionByName(
                 self._read_stage("components_delta").select(*cols))
@@ -502,11 +495,11 @@ class DedupPipeline:
     def _bucket_frame(self, kind: str, source: DataFrame,
                       lshcfg: ml.LSHConfig | None = None,
                       append: bool = False) -> DataFrame:
-        """The ONE definition of the bucket-index layout — full build,
-        backfill and per-batch append all route here so they can never
-        diverge: band/block rows + kb partition column, repartition("kb")
-        so every write lands ≈1 file per touched kb partition (appends
-        included; maintain_warehouse handles long-horizon file accretion).
+        """The ONE definition of the bucket-index layout — the full build
+        and every per-batch append route here so they can never diverge:
+        band/block rows + kb partition column, repartition("kb") so every
+        write lands ≈1 file per touched kb partition (appends included;
+        maintain_warehouse handles long-horizon file accretion).
         kind '*lsh_buckets' covers the caption family AND the media-token
         families (same banding, per-family LSH config).
 
@@ -515,7 +508,7 @@ class DedupPipeline:
         to); a fresh build derives it from the corpus size
         (derive_kb_partitions — 64 below ~128M bucket rows, scaling past
         that instead of the round-6 fixed constant)."""
-        if append and self.store.exists(kind):
+        if append:
             kb_mod = ml.kb_modulus(self._read_stage(kind))
         else:
             if kind.endswith("lsh_buckets"):
@@ -916,9 +909,9 @@ class DedupPipeline:
                             require_when_enabled=False)
         needed = ["signatures", "exact_edges", "components"]
         if self.cfg.use_captions:
-            needed += ["lsh_sigs", "lsh_edges"]
+            needed += ["lsh_sigs", "lsh_buckets", "lsh_edges"]
         if self.cfg.use_phash:
-            needed += ["phash_reps", "phash_edges"]
+            needed += ["phash_reps", "phash_blocks", "phash_edges"]
         if self.cfg.use_video:
             needed += ["video_tokens", "video_lsh_sigs", "video_lsh_edges",
                        "video_lsh_buckets"]
@@ -936,34 +929,6 @@ class DedupPipeline:
             if cfg_of != self.cfg.config_hash():
                 raise ValueError(
                     f"stage {name!r} was built with a different config")
-
-        # bucket/block index stages are the probe targets for every append;
-        # a warehouse written before they existed is backfilled once from
-        # the signature/rep stages (atomic stage write), then appended to.
-        if self.cfg.use_captions and not self.store.exists("lsh_buckets"):
-            self._write_stage(
-                "lsh_buckets",
-                self._bucket_frame("lsh_buckets", self._read_stage("lsh_sigs")),
-                partition_by=["kb"])
-        if self.cfg.use_phash and not self.store.exists("phash_blocks"):
-            self._write_stage(
-                "phash_blocks",
-                self._bucket_frame("phash_blocks", self._read_stage("phash_reps")),
-                partition_by=["kb"])
-        if self.cfg.use_captions:
-            needed.append("lsh_buckets")
-        if self.cfg.use_phash:
-            needed.append("phash_blocks")
-
-        # the assignment must be cb-partitioned for O(touched) relabel
-        # writes; a warehouse written before partitioning existed is
-        # rewritten once here (the old full-rewrite cost, paid one final
-        # time), then every subsequent append overwrites only touched
-        # partitions
-        if "cb" not in self._read_stage("components").columns:
-            self._write_stage("components",
-                              with_cb(self._read_stage("components")),
-                              partition_by=["cb"])
 
         # appends are NOT idempotent (duplicate signature rows, index reps
         # and edges on a replay), so an append run must be exclusive and

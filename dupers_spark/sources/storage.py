@@ -125,29 +125,6 @@ class StageStore:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self.path(name))
 
-    def overwrite_partitions(self, name: str, df: DataFrame,
-                             partition_by: list[str]) -> None:
-        """Replace ONLY the partitions present in ``df``, leaving every
-        other partition's files untouched — the O(touched) write primitive
-        for partitioned stage updates (e.g. the components assignment,
-        where an append relabels a handful of component buckets out of a
-        corpus-sized stage).
-
-        Iceberg: ``overwritePartitions()`` (an atomic snapshot). Parquet
-        fallback: dynamic partitionOverwriteMode — per-partition staging
-        commits, NOT atomic across partitions on a crash; callers guard
-        the window with a crash-evident sentinel exactly as for
-        :meth:`append` (markers refresh last, so a crash forces rebuild).
-        """
-        if self.use_iceberg:
-            df.writeTo(self._ident(name)).overwritePartitions()
-            return
-        self._heal(name)
-        (df.write.mode("overwrite")
-           .option("partitionOverwriteMode", "dynamic")
-           .partitionBy(*partition_by)
-           .parquet(self.path(name)))
-
     def read(self, name: str) -> DataFrame:
         if self.use_iceberg:
             return self.spark.read.table(self._ident(name))

@@ -4,6 +4,7 @@ import os
 import tempfile
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from dupers_spark.operators import exact
@@ -112,29 +113,34 @@ def test_mv_rm_bucket(spark):
     assert csvio.rm_bucket(sigs, "b2").count() == 1
 
 
-def test_streaming_incremental_signatures(spark):
-    """New files are hashed; already-indexed ids are skipped (dupe.go:941-966)."""
-    with tempfile.TemporaryDirectory() as td:
-        inp = os.path.join(td, "in")
-        sig_dir = os.path.join(td, "sigs")
-        ckpt = os.path.join(td, "ckpt")
-        images = datagen.make_images(spark, 40).cache()
-        images.filter(F.col("image_id") < "img_00000020").write.parquet(
-            inp, mode="overwrite"
-        )
-        q = ingest.stream_signatures(spark, inp, sig_dir, ckpt)
-        q.awaitTermination(120)
-        first = spark.read.parquet(sig_dir)
-        n1 = first.count()
-        assert n1 == 20  # zero-byte row (i=7) indexed under sha256('')
+def test_streaming_incremental_signatures(spark, tmp_path):
+    """New files are hashed; already-indexed ids are skipped (dupe.go:941-966).
+    The first batch bootstraps an empty warehouse; the second wave
+    re-delivers every old row in new files, and the replayed ids must not
+    be appended again."""
+    from dupers_spark.plans.pipeline import PipelineConfig
 
-        # second wave: 20 new + all 20 old re-delivered in new files
-        images.write.mode("append").parquet(inp)
-        q2 = ingest.stream_signatures(spark, inp, sig_dir, ckpt)
-        q2.awaitTermination(120)
-        final = spark.read.parquet(sig_dir)
-        assert final.count() == 40  # dupes skipped, zero-byte row indexed
-        assert final.select("image_id").distinct().count() == 40
+    inp = str(tmp_path / "in")
+    wh = str(tmp_path / "wh")
+    ckpt = str(tmp_path / "ckpt")
+    cfg = PipelineConfig(warehouse=wh, use_captions=False, use_phash=False)
+    images = datagen.make_images(spark, 40).cache()
+    images.filter(F.col("image_id") < "img_00000020").write.parquet(
+        inp, mode="overwrite"
+    )
+    q = ingest.stream_pipeline_appends(spark, inp, cfg, ckpt)
+    q.awaitTermination(300)
+    n1 = spark.read.parquet(wh + "/signatures").count()
+    assert n1 == 20  # zero-byte row (i=7) indexed under sha256('')
+
+    # second wave: 20 new + all 20 old re-delivered in new files
+    images.write.mode("append").parquet(inp)
+    q2 = ingest.stream_pipeline_appends(spark, inp, cfg, ckpt)
+    q2.awaitTermination(300)
+    final = spark.read.parquet(wh + "/signatures")
+    assert final.count() == 40  # dupes skipped, zero-byte row indexed
+    assert final.select("image_id").distinct().count() == 40
+    images.unpersist()
 
 
 def test_windowed_event_counts_batch(spark):
@@ -151,67 +157,33 @@ def test_windowed_event_counts_batch(spark):
     assert out == {(0, "click"): 2, (1, "view"): 1}
 
 
-def test_stream_near_dup_edges_matches_batch(spark, tmp_path):
-    """Continuous near-dup ingest: images arrive as two file-batches (the
-    parity split again, so near-dup links straddle micro-batches); the
-    accumulated streamed edge log must cluster identically to one batch
-    build over everything."""
-    from pyspark.sql import functions as F
-
-    from dupers_spark.operators import minhash_lsh as ml
-    from dupers_spark.operators.components import (
-        connected_components, with_singletons)
-    from dupers_spark.sources import datagen
-    from dupers_spark.streaming import ingest
-
-    images = datagen.make_images(spark, 100).cache()
-    images.count()
-    parity = F.substring("image_id", -1, 1).cast("int") % 2
-    in_dir = str(tmp_path / "in")
-    images.filter(parity == 0).coalesce(1).write.parquet(
-        in_dir + "/half=a")  # two files → two micro-batches at mFPT=1
-    images.filter(parity == 1).coalesce(1).write.mode("append").parquet(
-        in_dir + "/half=b")
-    wh = str(tmp_path / "wh")
-    q = ingest.stream_near_dup_edges(
-        spark, in_dir + "/half=*", wh, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1)
-    q.awaitTermination(120)
-
-    streamed = spark.read.parquet(wh + "/lsh_edges")
-    full_edges, _v, _d = ml.near_dup_edges(
-        images.select("image_id", "caption"))
-    ids = images.select("image_id")
-    got = {r["image_id"]: r["component_id"] for r in with_singletons(
-        connected_components(streamed), ids).collect()}
-    want = {r["image_id"]: r["component_id"] for r in with_singletons(
-        connected_components(full_edges), ids).collect()}
-    assert got == want
-    images.unpersist()
-
-
-def test_stream_pipeline_appends_matches_full_rebuild(spark, tmp_path):
-    """Continuous full-pipeline maintenance: run() on the even half, then
-    stream the odd half in two micro-batches through run_incremental —
-    the final components stage must equal a full rebuild over everything
-    (all three engines' cross-batch links straddle the splits)."""
-    from pyspark.sql import functions as F
-
+@pytest.mark.parametrize("bootstrap", ["empty", "run_even_half"])
+def test_stream_pipeline_appends_matches_full_rebuild(spark, tmp_path,
+                                                      bootstrap):
+    """Continuous full-pipeline maintenance: stream the odd half in two
+    micro-batches through run_incremental onto a warehouse that is either
+    built by run() on the even half, or empty — then the even half streams
+    first and its batch bootstraps the warehouse. The final components
+    stage must equal a full rebuild over everything (all three engines'
+    cross-batch links straddle the splits)."""
     from dupers_spark.plans.pipeline import DedupPipeline, PipelineConfig
-    from dupers_spark.sources import datagen
-    from dupers_spark.streaming import ingest
 
     images = datagen.make_images(spark, 100).cache()
     images.count()
     parity = F.substring("image_id", -1, 1).cast("int") % 2
     wh = str(tmp_path / "wh")
     cfg = PipelineConfig(warehouse=wh)
-    DedupPipeline(spark, cfg).run(images.filter(parity == 0))
+    in_dir = str(tmp_path / "in")
+    if bootstrap == "empty":
+        # one file → the first micro-batch at mFPT=1
+        images.filter(parity == 0).coalesce(1).write.parquet(in_dir + "/q=0")
+    else:
+        DedupPipeline(spark, cfg).run(images.filter(parity == 0))
 
     quarter = F.substring("image_id", -1, 1).cast("int") % 4
-    in_dir = str(tmp_path / "in")
     odd = images.filter(parity == 1)
-    odd.filter(quarter == 1).coalesce(1).write.parquet(in_dir + "/q=a")
+    odd.filter(quarter == 1).coalesce(1).write.mode("append").parquet(
+        in_dir + "/q=a")
     odd.filter(quarter == 3).coalesce(1).write.mode("append").parquet(
         in_dir + "/q=b")
     # maintain_every=1: the automated compaction hook runs after every
@@ -234,56 +206,6 @@ def test_stream_pipeline_appends_matches_full_rebuild(spark, tmp_path):
     for name in ("signatures", "lsh_sigs", "exact_edges"):
         n_files, n_parts = _stage_file_stats(wh + "/" + name)
         assert n_files <= 8 * max(1, n_parts), (name, n_files)
-    images.unpersist()
-
-
-def test_stream_near_dup_backfills_bucket_stage(spark, tmp_path):
-    """A pre-bucket-stage warehouse (lsh_sigs present, lsh_buckets absent —
-    written by older code) must have the FULL bucket index backfilled
-    before the first incremental probe: appending only the batch's own
-    buckets would leave every later probe blind to the pre-upgrade corpus
-    and silently lose cross-batch near-dup edges."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dupers_spark.operators import minhash_lsh as ml
-    from dupers_spark.operators.components import (
-        connected_components, with_singletons)
-    from dupers_spark.sources import datagen
-    from dupers_spark.streaming import ingest
-
-    images = datagen.make_images(spark, 100).cache()
-    images.count()
-    parity = F.substring("image_id", -1, 1).cast("int") % 2
-    wh = str(tmp_path / "wh")
-    # simulate the pre-upgrade warehouse: even half's SIGNATURES only
-    caps_old = images.filter(parity == 0).select("image_id", "caption")
-    grouped = ml.collapse_groups(caps_old)
-    ml.signatures(grouped.select("rep_id", "caption")) \
-        .select("rep_id", "shingles", "bands") \
-        .write.parquet(os.path.join(wh, "lsh_sigs"))
-    # old half's star edges belong to the pre-upgrade edge log
-    ml.star_edges(caps_old, grouped).write.parquet(
-        os.path.join(wh, "lsh_edges"))
-
-    # stream in the odd half — its near-dups of the OLD corpus must appear
-    in_dir = str(tmp_path / "in")
-    images.filter(parity == 1).coalesce(1).write.parquet(in_dir)
-    q = ingest.stream_near_dup_edges(
-        spark, in_dir, wh, str(tmp_path / "ckpt"), max_files_per_trigger=1)
-    q.awaitTermination(120)
-
-    assert os.path.exists(os.path.join(wh, "lsh_buckets"))  # backfilled
-    streamed = spark.read.parquet(os.path.join(wh, "lsh_edges"))
-    full_edges, _v, _d = ml.near_dup_edges(
-        images.select("image_id", "caption"))
-    ids = images.select("image_id")
-    got = {r["image_id"]: r["component_id"] for r in with_singletons(
-        connected_components(streamed), ids).collect()}
-    want = {r["image_id"]: r["component_id"] for r in with_singletons(
-        connected_components(full_edges), ids).collect()}
-    assert got == want
     images.unpersist()
 
 

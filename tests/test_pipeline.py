@@ -178,7 +178,9 @@ def test_run_incremental_matches_full_rebuild(spark, images):
     components must equal a full rebuild over everything (exact copies,
     caption chains, the flood and phash near-dups all straddle the parity
     split), the index/edge stages must be appended rather than rebuilt,
-    and a config mismatch must refuse."""
+    and a config mismatch or a missing bucket stage must refuse."""
+    import shutil
+
     import pytest
 
     parity = F.substring("image_id", -1, 1).cast("int") % 2
@@ -226,6 +228,11 @@ def test_run_incremental_matches_full_rebuild(spark, images):
             warehouse=os.path.join(td, "wh"), phash_radius=4))
         with pytest.raises(ValueError):
             bad.run_incremental(new)
+
+        # a warehouse missing its bucket index is refused by name
+        shutil.rmtree(os.path.join(td, "wh", "lsh_buckets"))
+        with pytest.raises(ValueError, match="lsh_buckets"):
+            DedupPipeline(spark, cfg).run_incremental(new)
 
 
 def test_incremental_components_append_writes_o_batch_bytes(spark):
