@@ -174,22 +174,27 @@ def connected_components(
 def incremental_components_delta(
         old_assign: DataFrame, new_edges: DataFrame, new_ids: DataFrame,
         a: str = "a", b: str = "b", id_col: str = "image_id",
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, int]:
     """O(batch) re-clustering of an append batch against a valid total
     assignment → the DELTA representation:
 
-      (relabel(old_lbl, new_lbl), new_assign(image_id, component_id))
+      (relabel(old_lbl, new_lbl), new_assign(image_id, component_id),
+       n_relabel)
 
     relabel maps every old component label that the batch merged into a
-    smaller-id blob; new_assign is the batch rows' own labels. Together
-    they determine the updated total assignment without materializing it:
-    a row keeps its label unless its component_id appears in relabel.
-    Callers that persist the assignment PARTITIONED (plans/pipeline.py)
-    use the delta to overwrite only the partitions holding relabeled or
-    new rows — O(touched) write amplification per append instead of the
-    O(corpus) rewrite the monolithic form forces.
-    :func:`incremental_components` is the thin corpus-wide wrapper.
-    Both returned frames are eagerly checkpointed (O(batch) each).
+    smaller-id blob; new_assign is the batch rows' own labels (exactly
+    ``new_ids``). Together they determine the updated total assignment
+    without materializing it: a row keeps its label unless its
+    component_id appears in relabel. plans/pipeline.py persists them AS a
+    delta — new_assign appends to ``components_delta`` and relabel
+    composes into the ``components_relabel`` log, so an append never
+    rewrites the corpus-sized base. :func:`incremental_components` is the
+    thin corpus-wide wrapper. Both returned frames are O(batch): local
+    frames built on the driver below the edge threshold, checkpoints
+    above it. n_relabel is relabel's row count — the length of the
+    driver-side list, so callers branch on it without a count job.
+    ``new_edges`` is read twice (endpoints, then edges), so pass a
+    materialized frame (the pipeline passes checkpoints).
 
     The contracted-graph construction: each old component is already a
     connected blob, so for clustering purposes it can be collapsed to a
@@ -209,46 +214,61 @@ def incremental_components_delta(
 
     Scale shape (the point): the old corpus is touched exactly ONCE here,
     shuffle-free — one broadcast-semi scan to fetch labels for the
-    ≤2·|E_new| touched endpoints. Zero corpus shuffles, and the iterative
-    CC barriers run over the contracted O(batch) graph instead of a
-    corpus-sized star forest (the round-4 formulation re-clustered
-    |corpus| star edges per append — O(corpus·rounds) shuffle volume that
-    defeats incrementality at 10^12 rows). Requires batch ids disjoint
-    from corpus ids (append semantics, enforced upstream by the pipeline).
+    ≤2·|E_new| touched endpoints. Zero corpus shuffles, and the CC runs
+    over the contracted O(batch) graph instead of a corpus-sized star
+    forest (the round-4 formulation re-clustered |corpus| star edges per
+    append — O(corpus·rounds) shuffle volume that defeats incrementality
+    at 10^12 rows). Requires batch ids disjoint from corpus ids (append
+    semantics, enforced upstream by the pipeline).
     """
     import os
 
     edges = new_edges.select(F.col(a).alias("a"), F.col(b).alias("b"))
     ep = edges.select(F.col("a").alias(id_col)).unionByName(
-        edges.select(F.col("b").alias(id_col))).distinct().localCheckpoint()
-    # labels for touched OLD endpoints: one corpus scan, broadcast join,
-    # O(batch) result
-    old_lbls = old_assign.join(F.broadcast(ep), id_col) \
-        .select(id_col, "component_id").localCheckpoint()
-    lmap = ep.join(old_lbls, id_col, "left").select(
-        id_col, F.coalesce("component_id", F.col(id_col)).alias("lbl"))
+        edges.select(F.col("b").alias(id_col)))
+    # labels for touched OLD endpoints: one corpus scan, broadcast-semi
+    # join, O(batch) result
+    old_lbls = old_assign.join(F.broadcast(ep), id_col, "leftsemi") \
+        .select(id_col, "component_id")
+    lbls = F.broadcast(old_lbls)
+    la, lb = lbls.alias("la"), lbls.alias("lb")
+    # the contracted edges (L(a), L(b)), each endpoint flagged when its
+    # label is an old component's, plus one self-loop per batch id (so an
+    # edgeless batch id still gets its own label)
     ce = (
         edges
-        .join(lmap.select(F.col(id_col).alias("a"), F.col("lbl").alias("la")), "a")
-        .join(lmap.select(F.col(id_col).alias("b"), F.col("lbl").alias("lb")), "b")
-        .select(F.col("la").alias("a"), F.col("lb").alias("b"))
+        .join(la, F.col("a") == F.col(f"la.{id_col}"), "left")
+        .join(lb, F.col("b") == F.col(f"lb.{id_col}"), "left")
+        .select(F.coalesce("la.component_id", "a").alias("a"),
+                F.coalesce("lb.component_id", "b").alias("b"),
+                F.col("la.component_id").isNotNull().alias("old_a"),
+                F.col("lb.component_id").isNotNull().alias("old_b"),
+                F.lit(False).alias("is_new"))
         .filter(F.col("a") != F.col("b"))
-        .distinct().localCheckpoint()
     )
+    graph = ce.unionByName(new_ids.select(
+        F.col(id_col).alias("a"), F.col(id_col).alias("b"),
+        F.lit(False).alias("old_a"), F.lit(False).alias("old_b"),
+        F.lit(True).alias("is_new")))
     # The contracted graph is O(batch) BY CONSTRUCTION (only components the
     # batch touches appear), so for every realistic append it is far below
-    # driver scale — a driver-side union-find labels it in milliseconds
-    # where the iterative star loop pays 2 shuffle barriers + a fingerprint
-    # job PER ROUND (measured: ~4 s of a 22 s 4k-row append was this loop's
-    # barriers). The threshold keeps the distributed loop for pathological
-    # batches; labels are identical either way (min member id — string min
-    # matches Spark's F.min on strings).
+    # driver scale: ONE fetch (the two broadcasts + one single-task scan of
+    # the checkpointed batch edges) and a driver-side union-find replace
+    # the iterative star loop's 2 shuffle barriers + fingerprint job PER
+    # ROUND. coalesce(1) keeps the limited fetch to one task — a limit
+    # over many partitions scans them in several rounds. The threshold
+    # keeps the distributed loop for pathological batches; labels are
+    # identical either way (min member id — string min matches Spark's
+    # F.min on strings).
     max_driver = int(os.environ.get("SPARK_GRAFT_DRIVER_CC_MAX_EDGES",
                                     str(1_000_000)))
-    if ce.count() <= max_driver:
-        contracted = _driver_components(ce, id_col)
-    else:
-        contracted = connected_components(ce).localCheckpoint()  # O(batch)
+    rows = graph.coalesce(1).limit(max_driver + 1).collect()
+    if len(rows) <= max_driver:
+        return _driver_delta(rows, graph.schema["a"].dataType,
+                             new_edges.sparkSession, id_col)
+
+    ce = ce.select("a", "b").distinct().localCheckpoint()
+    contracted = connected_components(ce).localCheckpoint()  # O(batch)
     # old components whose label changed (merged into a smaller-id blob)
     touched_old = old_lbls.select(F.col("component_id").alias(id_col)).distinct()
     relabel = (
@@ -266,15 +286,19 @@ def incremental_components_delta(
         F.broadcast(contracted.select(id_col)), id_col, "left_anti") \
         .withColumn("component_id", F.col(id_col))
     new_assign = new_in_graph.unionByName(lone_new).localCheckpoint()
-    return relabel, new_assign
+    return relabel, new_assign, relabel.count()
 
 
-def _driver_components(edges: DataFrame, id_col: str = "image_id") -> DataFrame:
-    """Union-find over an ALREADY-SMALL (collected) edge frame →
-    (id_col, component_id=min member) as a local DataFrame. Only called on
-    frames bounded by construction (the contracted batch graph); output
-    matches connected_components exactly: every node of the edge set is
-    labeled with the lexicographic min of its component."""
+def _driver_delta(rows, dtype, spark, id_col: str = "image_id",
+                  ) -> tuple[DataFrame, DataFrame, int]:
+    """Union-find over the fetched contracted graph rows
+    (a, b, old_a, old_b, is_new) → (relabel, new_assign, n_relabel) with
+    local frames, identical to the distributed path: every node is
+    labeled with the lexicographic min of its component, relabel holds
+    the old labels whose root moved, and new_assign holds each batch id
+    (is_new rows)."""
+    from pyspark.sql.types import StructField, StructType
+
     parent: dict = {}
 
     def find(x):
@@ -285,9 +309,15 @@ def _driver_components(edges: DataFrame, id_col: str = "image_id") -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    rows = edges.collect()
-    for r in rows:
-        u, v = r["a"], r["b"]
+    old: set = set()
+    new: dict = {}
+    for u, v, old_u, old_v, is_new in rows:
+        if old_u:
+            old.add(u)
+        if old_v:
+            old.add(v)
+        if is_new:
+            new[u] = None
         parent.setdefault(u, u)
         parent.setdefault(v, v)
         ru, rv = find(u), find(v)
@@ -296,10 +326,17 @@ def _driver_components(edges: DataFrame, id_col: str = "image_id") -> DataFrame:
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    out = [(x, find(x)) for x in parent]
-    t = edges.schema["a"].dataType.simpleString()
-    return edges.sparkSession.createDataFrame(
-        out, f"{id_col} {t}, component_id {t}")
+    relabel = [(x, find(x)) for x in old if find(x) != x]
+    new_assign = [(x, find(x)) for x in new]
+
+    def local(out, names):
+        # one partition: a list this small would otherwise be sliced over
+        # every core, and each slice becomes a file when it is persisted
+        return spark.createDataFrame(out, StructType(
+            [StructField(n, dtype) for n in names])).coalesce(1)
+
+    return (local(relabel, ["old_lbl", "new_lbl"]),
+            local(new_assign, [id_col, "component_id"]), len(relabel))
 
 
 def incremental_components(old_assign: DataFrame, new_edges: DataFrame,
@@ -311,7 +348,7 @@ def incremental_components(old_assign: DataFrame, new_edges: DataFrame,
     touched only by one map-side broadcast-relabel pass — but materializing
     the result writes O(corpus) rows, so pipelines that persist the
     assignment should apply the delta per-partition instead."""
-    relabel, new_assign = incremental_components_delta(
+    relabel, new_assign, _ = incremental_components_delta(
         old_assign, new_edges, new_ids, a, b, id_col)
     updated_old = apply_relabel(old_assign, relabel, id_col)
     return updated_old.unionByName(new_assign)

@@ -97,6 +97,17 @@ def cb_modulus(assign: DataFrame) -> int:
     return CB_PARTITIONS
 
 
+def spread_partitions(df: DataFrame, n_values: int, *cols: str) -> DataFrame:
+    """Hash-repartition a partitioned-stage write by its partition
+    column(s) into min(n_values, defaultParallelism) tasks. Every value
+    still lands in exactly one task — one file per touched partition —
+    and the files are written on every core: a bare repartition(col) lets
+    AQE fold a small shuffle into ONE task that writes every partition's
+    file back to back."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(max(1, min(n_values, par)), *cols)
+
+
 def with_cb(df: DataFrame, mod: int = CB_PARTITIONS) -> DataFrame:
     meta = {"cb_mod": mod}
     cb = F.pmod(F.xxhash64("image_id"), F.lit(mod)).cast("int")
@@ -202,7 +213,9 @@ def compact_stage(spark: SparkSession, path: str,
         # one file per partition value: each partition's data is small by
         # construction (corpus / KB_PARTITIONS), so per-partition file
         # count — not global target size — is the right shape here
-        df.repartition(*part_cols).write.mode("overwrite") \
+        n_dirs = len({os.path.dirname(os.path.relpath(f, path))
+                      for f in files})
+        spread_partitions(df, n_dirs, *part_cols).write.mode("overwrite") \
             .partitionBy(*part_cols).parquet(tmp)
     else:
         df.repartition(int(n_out)).write.mode("overwrite").parquet(tmp)
@@ -345,7 +358,7 @@ def _maintain_locked(spark, warehouse, file_factor, sa_factor,
         cb_after = derive_cb_partitions(eff.count(), floor=CB_PARTITIONS)
         if cb_after != cb_before:
             eff = with_cb(eff.drop("cb"), cb_after)
-        eff = eff.repartition("cb")  # ≈1 file per cb partition
+        eff = spread_partitions(eff, cb_after, "cb")  # 1 file per cb
         # the stage marker (resume identity) lives inside the stage dir in
         # parquet mode — preserve it across the rewrite like compact_stage
         # preserves sidecars
@@ -470,12 +483,16 @@ class DedupPipeline:
     def _read_stage(self, name: str) -> DataFrame:
         return self.store.read(name)
 
-    def _effective_components(self) -> DataFrame:
+    def _effective_components(self, base: DataFrame | None = None,
+                              ) -> DataFrame:
         """The served assignment: base ∪ delta with the relabel log applied
         — one broadcast map over the scan, zero corpus shuffles, and the
-        corpus-sized base stage is never rewritten by appends."""
+        corpus-sized base stage is never rewritten by appends. ``base``:
+        the already-open ``components`` stage (read here when None)."""
         cols = ["image_id", "component_id", "cb"]
-        eff = self._read_stage("components").select(*cols)
+        if base is None:
+            base = self._read_stage("components")
+        eff = base.select(*cols)
         if self.store.exists("components_delta"):
             eff = eff.unionByName(
                 self._read_stage("components_delta").select(*cols))
@@ -494,22 +511,23 @@ class DedupPipeline:
 
     def _bucket_frame(self, kind: str, source: DataFrame,
                       lshcfg: ml.LSHConfig | None = None,
-                      append: bool = False) -> DataFrame:
+                      index: DataFrame | None = None) -> DataFrame:
         """The ONE definition of the bucket-index layout — the full build
         and every per-batch append route here so they can never diverge:
-        band/block rows + kb partition column, repartition("kb") so every
-        write lands ≈1 file per touched kb partition (appends included;
+        band/block rows + kb partition column, hash-spread by kb over the
+        cores (spread_partitions) so every write lands exactly 1 file per
+        touched kb partition, written in parallel (appends included;
         maintain_warehouse handles long-horizon file accretion).
         kind '*lsh_buckets' covers the caption family AND the media-token
         families (same banding, per-family LSH config).
 
-        The kb modulus follows the stage at rest for appends
-        (append=True: batch rows must land in the partitions probes prune
-        to); a fresh build derives it from the corpus size
-        (derive_kb_partitions — 64 below ~128M bucket rows, scaling past
-        that instead of the round-6 fixed constant)."""
-        if append:
-            kb_mod = ml.kb_modulus(self._read_stage(kind))
+        An append passes the already-open stage as ``index``: the kb
+        modulus follows the stage at rest (batch rows must land in the
+        partitions probes prune to). A fresh build derives it from the
+        corpus size (derive_kb_partitions — 64 below ~128M bucket rows,
+        scaling past that instead of the round-6 fixed constant)."""
+        if index is not None:
+            kb_mod = ml.kb_modulus(index)
         else:
             if kind.endswith("lsh_buckets"):
                 per_row = (lshcfg or self.cfg.lsh).bands
@@ -520,7 +538,7 @@ class DedupPipeline:
             rows = ml.band_buckets(source, lshcfg or self.cfg.lsh)
         else:  # phash_blocks
             rows = sh.sig_blocks(source, self.cfg.phash_radius)
-        return ml.with_kb(rows, kb_mod).repartition("kb")
+        return spread_partitions(ml.with_kb(rows, kb_mod), kb_mod, "kb")
 
     def _fp_rows(self) -> int:
         """Corpus row count from the input fingerprint (0 when unset)."""
@@ -982,11 +1000,25 @@ class DedupPipeline:
         # ------------- probe phase: EVERYTHING is computed and eagerly
         # materialized before a single row is appended, so a failure here
         # (bad batch schema, transient executor loss) leaves the warehouse
-        # exactly as it was — no rebuild, sentinel released on the way out
+        # exactly as it was — no rebuild, sentinel released on the way out.
+        # Every index stage is opened ONCE here and the frame passed on: a
+        # read of a kb/cb-partitioned stage (64+ partition dirs) is itself
+        # a Spark file-listing job.
+        #
+        # The post-append input identity (markers, below) is count+xor, and
+        # those compose: it is the previous identity ⊕ a BATCH-only
+        # aggregate, so no append re-scans the corpus for it.
+        fp_expr = F.coalesce(
+            F.expr("bit_xor(xxhash64(image_id, sha256, phash, caption))"),
+            F.lit(0)).alias("h")
+        sig_marker = self._marker("signatures")
+        prev_fp = (open(sig_marker).read().strip().split(":", 1)[1]
+                   if os.path.exists(sig_marker) else "")
         try:
             t0 = time.time()
             bsigs = self._signature_frame(new_images).localCheckpoint()
-            n_batch_rows = bsigs.count()
+            bfp = bsigs.agg(F.count("*").alias("n"), fp_expr).collect()[0]
+            n_batch_rows = int(bfp["n"])
             metric("inc_signatures", n_batch_rows, t0)
             old_sigs = self._read_stage("signatures")
 
@@ -1017,6 +1049,7 @@ class DedupPipeline:
             def lsh_branch():
                 t0 = time.time()
                 lsh_sigs = self._read_stage("lsh_sigs")
+                lsh_buckets = self._read_stage("lsh_buckets")
                 caps_new = bsigs.select("image_id", "caption")
                 # probe the PERSISTED band-bucket stage (kb-pruned skinny
                 # scan) — the signature stage is only touched for verify
@@ -1024,14 +1057,13 @@ class DedupPipeline:
                 lsh_inc, _ver, dropped, sigs_new = \
                     ml.incremental_near_dup_edges(
                         lsh_sigs.select("rep_id", "shingles", "bands"),
-                        caps_new, self.cfg.lsh,
-                        index_buckets=self._read_stage("lsh_buckets"))
+                        caps_new, self.cfg.lsh, index_buckets=lsh_buckets)
                 lsh_inc = lsh_inc.localCheckpoint()
                 # sigs_new is checkpointed and carries caption — the
                 # append rows are pure projections, no extra jobs
                 lsh_sig_rows = sigs_new.select(*lsh_sigs.columns)
                 lsh_bucket_rows = self._bucket_frame("lsh_buckets", sigs_new,
-                                                    append=True)
+                                                    index=lsh_buckets)
                 n_lsh = lsh_inc.count()
                 self.metrics.append({"stage": "inc_lsh_dropped_buckets",
                                      "rows": dropped.count(),
@@ -1046,17 +1078,17 @@ class DedupPipeline:
                 # at submit time
                 batch_tokens = batch_tokens.localCheckpoint()
                 fam_sigs = self._read_stage(f"{prefix}lsh_sigs")
+                fam_buckets = self._read_stage(f"{prefix}lsh_buckets")
                 m_inc, _mv, m_drop, m_sigs_new = \
                     ml.incremental_near_dup_edges(
                         fam_sigs.select("rep_id", "shingles", "bands"),
                         batch_tokens, self.cfg.media_lsh, id_col="media_id",
-                        index_buckets=self._read_stage(
-                            f"{prefix}lsh_buckets"))
+                        index_buckets=fam_buckets)
                 m_inc = m_inc.localCheckpoint()
                 sig_rows = m_sigs_new.select(*fam_sigs.columns)
                 bucket_rows = self._bucket_frame(
                     f"{prefix}lsh_buckets", m_sigs_new, self.cfg.media_lsh,
-                    append=True)
+                    index=fam_buckets)
                 n_m = m_inc.count()
                 self.metrics.append(
                     {"stage": f"inc_{prefix}lsh_dropped_buckets",
@@ -1067,18 +1099,19 @@ class DedupPipeline:
             def phash_branch():
                 t0 = time.time()
                 reps_stage = self._read_stage("phash_reps")
+                blocks_stage = self._read_stage("phash_blocks")
                 pimg_new = bsigs.select("image_id", "phash").filter(
                     F.col("phash").isNotNull())
                 ph_inc, _ver, dropped_p, reps_new = \
                     sh.incremental_hamming_edges(
                         reps_stage, pimg_new, self.cfg.phash_radius,
-                        index_blocks=self._read_stage("phash_blocks"))
+                        index_blocks=blocks_stage)
                 ph_inc = ph_inc.localCheckpoint()
                 # reps_new is a projection of the probe's checkpointed
                 # collapse frame — append rows need no extra jobs
                 ph_rep_rows = reps_new.select("rep_id", "sig")
                 ph_block_rows = self._bucket_frame("phash_blocks", reps_new,
-                                                  append=True)
+                                                  index=blocks_stage)
                 n_ph = ph_inc.count()
                 self.metrics.append({"stage": "inc_phash_dropped_buckets",
                                      "rows": dropped_p.count(),
@@ -1108,6 +1141,15 @@ class DedupPipeline:
                             self.cfg.audio_bands))
                 if self.cfg.use_phash:
                     futs["phash"] = pool.submit(phash_branch)
+                futs["base"] = pool.submit(self._read_stage, "components")
+                if not prev_fp.startswith("inc:"):
+                    # first append after a full run(): its marker carries
+                    # the image-frame fp, so seed the inc chain from the
+                    # PRE-append stage (⊕ the batch below — the same value
+                    # as an aggregate over the post-append stage)
+                    futs["seed"] = pool.submit(
+                        lambda: old_sigs.agg(F.count("*").alias("n"),
+                                             fp_expr).collect()[0])
                 results = {k: f.result() for k, f in futs.items()}
 
             new_edge_frames: list[DataFrame] = []
@@ -1124,6 +1166,14 @@ class DedupPipeline:
             if self.cfg.use_phash:
                 ph_inc, ph_rep_rows, ph_block_rows, n_ph = results["phash"]
                 new_edge_frames.append(ph_inc)
+            if prev_fp.startswith("inc:"):
+                _, n0, h0 = prev_fp.split(":")
+                n_old, h_old = int(n0), int(h0, 16)
+            else:
+                n_old = int(results["seed"]["n"])
+                h_old = results["seed"]["h"] & 0xFFFFFFFFFFFFFFFF
+            n_total = n_old + n_batch_rows
+            h_total = h_old ^ (bfp["h"] & 0xFFFFFFFFFFFFFFFF)
 
             # recluster via the CONTRACTED graph (components.py): old
             # components touched by the batch collapse to their labels, CC
@@ -1137,7 +1187,8 @@ class DedupPipeline:
             # contract (dupe.go:941-966). Reads serve
             # apply_relabel(base ∪ delta, log); maintain_warehouse folds.
             t0 = time.time()
-            old_assign = self._effective_components()
+            base = results["base"]
+            old_assign = self._effective_components(base)
             new_edges_all = new_edge_frames[0]
             for e in new_edge_frames[1:]:
                 new_edges_all = new_edges_all.unionByName(e)
@@ -1148,15 +1199,12 @@ class DedupPipeline:
             if self.cfg.use_audio and new_audio is not None:
                 batch_ids = batch_ids.unionByName(
                     new_audio.select(F.col("media_id").alias("image_id")))
-            relabel, new_assign = incremental_components_delta(
+            relabel, new_assign, n_relabel = incremental_components_delta(
                 old_assign.select("image_id", "component_id"),
                 new_edges_all, batch_ids)
             # delta rows use the BASE stage's modulus (column metadata) so
             # the fold unions one consistent layout
-            new_assign = with_cb(
-                new_assign,
-                cb_modulus(self._read_stage("components"))).localCheckpoint()
-            n_relabel = relabel.count()  # checkpointed — trivial job
+            new_assign = with_cb(new_assign, cb_modulus(base))
             if n_relabel and self.store.exists("components_relabel"):
                 # compose: stored labels that previously mapped to a label
                 # the batch just merged away follow it to the new label, so
@@ -1180,13 +1228,19 @@ class DedupPipeline:
 
         # ------------- append window: pre-materialized frames only; a
         # crash from here on leaves the sentinel in place (markers stale,
-        # rebuild required). Every append derives solely from checkpoints
-        # and targets its OWN stage directory, so the ~9 small write jobs
-        # are independent — submitted from a thread pool they overlap
-        # (measured serial: 3.8 s of a 22 s 4k-row append was this window's
-        # back-to-back write barriers). Crash semantics are unchanged: any
-        # failure leaves the sentinel in place.
+        # rebuild required). Every write derives solely from checkpoints
+        # or driver-local frames and targets its OWN stage directory — the
+        # index/edge/signature appends, the components_delta append and
+        # the components_relabel rewrite are independent, so they all run
+        # from one thread pool and overlap (measured serial: 3.8 s of a
+        # 22 s 4k-row append was back-to-back write barriers). The
+        # corpus-sized components base is NOT written. Crash semantics are
+        # unchanged: any failure leaves the sentinel in place.
         t0 = time.time()
+        # ≈1 file per ~1M delta rows per append (a delta row is ~50 B) —
+        # not one file per upstream task; maintain_warehouse's fold handles
+        # long-horizon accretion
+        n_delta_files = max(1, n_batch_rows // 1_000_000 + 1)
         writes: list[tuple] = [("exact_edges", exact_inc, None)]
         if self.cfg.use_captions:
             writes += [("lsh_sigs", lsh_sig_rows, None),
@@ -1202,13 +1256,24 @@ class DedupPipeline:
                        (f"{prefix}lsh_sigs", sig_rows, None),
                        (f"{prefix}lsh_buckets", bucket_rows, ["kb"]),
                        (f"{prefix}lsh_edges", m_inc, None)]
-        writes.append(("signatures", bsigs, None))
+        writes += [("signatures", bsigs, None),
+                   ("components_delta",
+                    new_assign.select("image_id", "component_id", "cb")
+                    .coalesce(n_delta_files), None)]
+
+        def timed(op, name, df, pb=None):
+            t0w = time.time()
+            op(name, df, partition_by=pb)
+            return time.time() - t0w
+
         with ThreadPoolExecutor(4) as pool:
-            wfuts = [pool.submit(self.store.append, name, df,
-                                 partition_by=pb)
-                     for name, df, pb in writes]
-            for f in wfuts:
-                f.result()
+            wfuts = {name: pool.submit(timed, self.store.append, name, df, pb)
+                     for name, df, pb in writes}
+            if n_relabel:
+                wfuts["components_relabel"] = pool.submit(
+                    timed, self.store.write, "components_relabel",
+                    new_log.select("old_lbl", "new_lbl"))
+            took = {name: f.result() for name, f in wfuts.items()}
         lineage_append("exact_edges", n_ex)
         if self.cfg.use_captions:
             for st in ("lsh_sigs", "lsh_buckets"):
@@ -1224,51 +1289,17 @@ class DedupPipeline:
                 lineage_append(st)
             lineage_append(f"{prefix}lsh_edges", n_m)
         lineage_append("signatures")
+        # components: O(batch) delta append + O(merged) relabel-log rewrite,
+        # concurrent with each other — seconds is the slower of the two
+        self.metrics.append({
+            "stage": "inc_components_delta", "rows": n_relabel,
+            "seconds": round(max(took["components_delta"],
+                                 took.get("components_relabel", 0.0)), 3)})
+        lineage_append("components")
         metric("inc_append_window", -1, t0)
 
-        # post-append input identity — the "inc:" namespace never collides
-        # with run()'s image-frame fingerprint, so a later full run()
-        # rebuilds rather than resuming. count+xor compose, so the steady
-        # state combines the previous marker's fp with a BATCH-only
-        # aggregate (the checkpointed bsigs — no corpus scan per append);
-        # only the first append after a full run(), whose marker carries
-        # the differently-derived image-frame fp, pays one full
-        # signatures-stage aggregate to seed the inc chain.
-        fp_expr = F.coalesce(
-            F.expr("bit_xor(xxhash64(image_id, sha256, phash, caption))"),
-            F.lit(0)).alias("h")
-        bfp = bsigs.agg(F.count("*").alias("n"), fp_expr).collect()[0]
-        sig_marker = self._marker("signatures")
-        prev_fp = (open(sig_marker).read().strip().split(":", 1)[1]
-                   if os.path.exists(sig_marker) else "")
-        if prev_fp.startswith("inc:"):
-            _, n0, h0 = prev_fp.split(":")
-            n_total = int(n0) + int(bfp["n"])
-            h_total = int(h0, 16) ^ (bfp["h"] & 0xFFFFFFFFFFFFFFFF)
-        else:
-            fp = self._read_stage("signatures").agg(
-                F.count("*").alias("n"), fp_expr).collect()[0]
-            n_total = int(fp["n"])
-            h_total = fp["h"] & 0xFFFFFFFFFFFFFFFF
-        # components: O(batch) delta append + O(merged) relabel-log rewrite
-        # — the corpus-sized base stage is NOT touched. Both frames derive
-        # solely from checkpoints, so the writes read no stage being
-        # written (the round-6 overwrite's read-own-target hazard is gone
-        # with the overwrite itself).
-        t0 = time.time()
-        # ≈1 file per ~1M delta rows per append (a delta row is ~50 B) —
-        # not one file per upstream task; maintain_warehouse's fold handles
-        # long-horizon accretion
-        n_delta_files = max(1, n_batch_rows // 1_000_000 + 1)
-        self.store.append("components_delta",
-                          new_assign.select("image_id", "component_id", "cb")
-                          .coalesce(n_delta_files))
-        if n_relabel:
-            self.store.write("components_relabel",
-                             new_log.select("old_lbl", "new_lbl"))
-        metric("inc_components_delta", n_relabel, t0)
-        lineage_append("components")
-
+        # the "inc:" namespace never collides with run()'s image-frame
+        # fingerprint, so a later full run() rebuilds rather than resuming
         self._input_fp = f"inc:{n_total}:{h_total:016x}"
         for rec in self.lineage:
             if rec["stage"].endswith("+append") and not rec["input_fp"]:
@@ -1279,7 +1310,9 @@ class DedupPipeline:
             with open(self._marker(name), "w") as fh:
                 fh.write(self._marker_value())
 
-        comps = self._effective_components().select(
+        # the base is unchanged by the append: only the delta and the log
+        # are re-read for the served assignment
+        comps = self._effective_components(base).select(
             "image_id", "component_id")
         self._write_metrics(append_lineage=True)
         os.remove(pending)  # every append landed + markers refreshed
@@ -1291,7 +1324,10 @@ class DedupPipeline:
         history (prior records describe stages it just replaced); an
         incremental run APPENDS, so the full-build records and every prior
         batch's '+append' rows survive across processes — the audit trail
-        the append path exists to provide."""
+        the append path exists to provide. The two tables are independent
+        directories, so their writes run concurrently."""
+        from concurrent.futures import ThreadPoolExecutor
+
         mdf = self.spark.createDataFrame(
             [
                 (m["stage"], int(m["rows"]), float(m["seconds"]), bool(m.get("resumed", False)))
@@ -1299,18 +1335,21 @@ class DedupPipeline:
             ],
             "stage string, rows long, seconds double, resumed boolean",
         )
-        self.store.write("metrics", mdf)
-        if self.lineage:
-            ldf = self.spark.createDataFrame(
-                [
-                    (r["stage"], r["config_hash"], r["input_fp"],
-                     int(r["rows"]), float(r["written_at"]))
-                    for r in self.lineage
-                ],
-                "stage string, config_hash string, input_fp string, "
-                "rows long, written_at double",
-            )
-            if append_lineage and self.store.exists("lineage"):
-                self.store.append("lineage", ldf)
-            else:
-                self.store.write("lineage", ldf)
+        with ThreadPoolExecutor(2) as pool:
+            futs = [pool.submit(self.store.write, "metrics", mdf)]
+            if self.lineage:
+                ldf = self.spark.createDataFrame(
+                    [
+                        (r["stage"], r["config_hash"], r["input_fp"],
+                         int(r["rows"]), float(r["written_at"]))
+                        for r in self.lineage
+                    ],
+                    "stage string, config_hash string, input_fp string, "
+                    "rows long, written_at double",
+                )
+                op = (self.store.append
+                      if append_lineage and self.store.exists("lineage")
+                      else self.store.write)
+                futs.append(pool.submit(op, "lineage", ldf))
+            for f in futs:
+                f.result()

@@ -5,6 +5,7 @@ import random
 from dupers_spark.operators.components import (
     connected_components,
     incremental_components,
+    incremental_components_delta,
     with_singletons,
 )
 
@@ -58,9 +59,15 @@ def test_large_star_hub_component(spark):
     assert assign.count() == n  # hub + n-1 members
 
 
-def _full_vs_incremental(spark, base_edges, base_ids, delta_edges, new_ids):
+def _full_vs_incremental(spark, monkeypatch, base_edges, base_ids,
+                         delta_edges, new_ids):
     """Assert incremental_components over (base assignment, delta) equals a
-    from-scratch CC over base ∪ delta edges on the union id set."""
+    from-scratch CC over base ∪ delta edges on the union id set — on BOTH
+    recluster paths: the driver union-find (default threshold) and the
+    distributed star loop (forced by a 0-edge threshold; an empty
+    contracted graph has nothing to distribute and stays on the driver).
+    The two paths must return identical relabel and new_assign sets.
+    Returns the driver path's (relabel, new_assign) sets."""
     base_df = spark.createDataFrame(base_edges or [("__x__", "__x__")], ["a", "b"])
     base_ids_df = spark.createDataFrame([(i,) for i in base_ids], ["image_id"])
     old = with_singletons(connected_components(base_df), base_ids_df)
@@ -69,18 +76,33 @@ def _full_vs_incremental(spark, base_edges, base_ids, delta_edges, new_ids):
         [(i,) for i in new_ids] or [("__none__",)], ["image_id"])
     if not new_ids:
         new_ids_df = new_ids_df.limit(0)
-    inc = incremental_components(old, delta_df, new_ids_df)
     all_df = spark.createDataFrame(
         (base_edges + delta_edges) or [("__x__", "__x__")], ["a", "b"])
     all_ids_df = spark.createDataFrame(
         [(i,) for i in (list(base_ids) + list(new_ids))], ["image_id"])
     full = with_singletons(connected_components(all_df), all_ids_df)
-    got = {(r["image_id"], r["component_id"]) for r in inc.collect()}
     want = {(r["image_id"], r["component_id"]) for r in full.collect()}
-    assert got == want
+    deltas = []
+    for max_edges in (None, "0"):
+        if max_edges is not None:
+            monkeypatch.setenv("SPARK_GRAFT_DRIVER_CC_MAX_EDGES", max_edges)
+        inc = incremental_components(old, delta_df, new_ids_df)
+        got = {(r["image_id"], r["component_id"]) for r in inc.collect()}
+        assert got == want
+        relabel, new_assign, n_relabel = incremental_components_delta(
+            old, delta_df, new_ids_df)
+        rel = {(r["old_lbl"], r["new_lbl"]) for r in relabel.collect()}
+        assert n_relabel == len(rel) == relabel.count()
+        assigned = {(r["image_id"], r["component_id"])
+                    for r in new_assign.collect()}
+        assert {i for i, _ in assigned} == set(new_ids)
+        assert new_assign.count() == len(new_ids)
+        deltas.append((rel, assigned))
+    assert deltas[0] == deltas[1]
+    return deltas[0]
 
 
-def test_incremental_matches_full_merge_and_bridge(spark):
+def test_incremental_matches_full_merge_and_bridge(spark, monkeypatch):
     """Batch edges that (a) merge two old components via a new node,
     (b) merge two old components directly (old-old edge), (c) attach a new
     chain, with isolated new ids left over."""
@@ -94,19 +116,21 @@ def test_incremental_matches_full_merge_and_bridge(spark):
         ("n4", "e1"),                     # attach to an old singleton
     ]
     new_ids = ["n1", "n2", "n3", "n4", "n5"]  # n5 isolated
-    _full_vs_incremental(spark, base_edges, base_ids, delta_edges, new_ids)
+    _full_vs_incremental(spark, monkeypatch, base_edges, base_ids,
+                         delta_edges, new_ids)
 
 
-def test_incremental_noop_edges_within_old_component(spark):
+def test_incremental_noop_edges_within_old_component(spark, monkeypatch):
     """Delta edges entirely inside existing components contract to
     self-loops — the assignment must come back unchanged."""
     base_edges = [("a1", "a2"), ("a2", "a3")]
     base_ids = ["a1", "a2", "a3", "z9"]
     delta_edges = [("a1", "a3"), ("a2", "a3")]
-    _full_vs_incremental(spark, base_edges, base_ids, delta_edges, [])
+    _full_vs_incremental(spark, monkeypatch, base_edges, base_ids,
+                         delta_edges, [])
 
 
-def test_incremental_random_graphs_match_full(spark):
+def test_incremental_random_graphs_match_full(spark, monkeypatch):
     """Seeded random base/delta splits — chains of merges across many
     components, repeated batch ids, mixed old/new endpoints."""
     rng = random.Random(7)
@@ -120,7 +144,22 @@ def test_incremental_random_graphs_match_full(spark):
         if x != y and (x in base_ids or y in base_ids or True):
             delta_edges.append((x, y))
     # ensure every new id not in delta is still assigned (singleton path)
-    _full_vs_incremental(spark, base_edges, base_ids, delta_edges, new_ids)
+    _full_vs_incremental(spark, monkeypatch, base_edges, base_ids,
+                         delta_edges, new_ids)
+
+
+def test_incremental_self_loop_and_edgeless_batch_id(spark, monkeypatch):
+    """A batch edge between two members of one old component contracts to
+    a self-loop (nothing relabeled), a batch id joins an old component
+    through one edge, and a batch id with no edge at all labels itself."""
+    base_edges = [("a1", "a2"), ("a2", "a3"), ("b1", "b2")]
+    base_ids = ["a1", "a2", "a3", "b1", "b2"]
+    delta_edges = [("a1", "a3"), ("n1", "a2")]
+    new_ids = ["n1", "n2"]
+    relabel, new_assign = _full_vs_incremental(
+        spark, monkeypatch, base_edges, base_ids, delta_edges, new_ids)
+    assert relabel == set()
+    assert new_assign == {("n1", "a1"), ("n2", "n2")}
 
 
 def test_with_singletons(spark):

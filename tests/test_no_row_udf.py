@@ -34,10 +34,11 @@ def test_no_collect_in_operators():
     prune_index_by_kb's touched-partition collect (minhash_lsh.py) is
     ≤ KB_PARTITIONS=64 ints by construction (distinct of key & 63), the
     literal isin list that makes the bucket-stage scan partition-prune;
-    and (round 7) _driver_components' edge collect (components.py) —
-    gated on an explicit edge-count threshold over the CONTRACTED batch
-    graph, which is O(batch) by construction; over-threshold batches take
-    the distributed star loop, so no corpus-sized frame can reach it."""
+    and incremental_components_delta's contracted-graph fetch
+    (components.py) — a limit(threshold + 1) collect over the CONTRACTED
+    batch graph, which is O(batch) by construction; over-threshold batches
+    take the distributed star loop, so no corpus-sized frame can reach
+    the driver."""
     # exact expected counts, not whole-file exemptions: a NEW collect added
     # to these files must fail this gate until adjudicated here
     allowed_counts = {"components.py": 2, "ann.py": 4, "search.py": 3,

@@ -177,22 +177,56 @@ def test_run_incremental_matches_full_rebuild(spark, images):
     the even half, run_incremental with the odd half — the final
     components must equal a full rebuild over everything (exact copies,
     caption chains, the flood and phash near-dups all straddle the parity
-    split), the index/edge stages must be appended rather than rebuilt,
-    and a config mismatch or a missing bucket stage must refuse."""
+    split), the index/edge stages must be appended rather than rebuilt
+    with the bucket layout kept (one new file per touched kb partition,
+    one file per cb partition after maintenance), the signatures marker
+    must carry the whole post-append stage's identity, and a config
+    mismatch or a missing bucket stage must refuse."""
+    import glob
     import shutil
 
     import pytest
+
+    from dupers_spark.plans.pipeline import maintain_warehouse
 
     parity = F.substring("image_id", -1, 1).cast("int") % 2
     old = images.filter(parity == 0)
     new = images.filter(parity == 1)
     with tempfile.TemporaryDirectory() as td:
-        cfg = PipelineConfig(warehouse=os.path.join(td, "wh"))
+        wh = os.path.join(td, "wh")
+        cfg = PipelineConfig(warehouse=wh)
         DedupPipeline(spark, cfg).run(old)
+
+        def files_per_part(stage, col):
+            d = os.path.join(wh, stage)
+            return {p: len(glob.glob(os.path.join(d, p, "*.parquet")))
+                    for p in os.listdir(d) if p.startswith(f"{col}=")}
+
+        buckets_before = {st: files_per_part(st, "kb")
+                          for st in ("lsh_buckets", "phash_blocks")}
         p2 = DedupPipeline(spark, cfg)
         comps_inc = p2.run_incremental(new)
         got = {(r["image_id"], r["component_id"])
                for r in comps_inc.collect()}
+        # the append writes exactly one file into each kb partition it
+        # touches (every kb value lands in one write task)
+        for st, before in buckets_before.items():
+            gained = {p: n - before.get(p, 0)
+                      for p, n in files_per_part(st, "kb").items()}
+            touched = {p: g for p, g in gained.items() if g}
+            assert touched and set(touched.values()) == {1}, (st, gained)
+        # the signatures marker is the post-append stage's identity: the
+        # first append seeds it from the pre-append stage ⊕ the batch,
+        # which must equal an aggregate over the whole stage after it
+        sig_row = spark.read.parquet(os.path.join(wh, "signatures")).agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.expr(
+                "bit_xor(xxhash64(image_id, sha256, phash, caption))"),
+                F.lit(0)).alias("h")).collect()[0]
+        with open(p2._marker("signatures")) as fh:
+            assert fh.read().strip() == (
+                f"{cfg.config_hash()}:inc:{sig_row['n']}:"
+                f"{sig_row['h'] & 0xFFFFFFFFFFFFFFFF:016x}")
         stages = {m["stage"] for m in p2.metrics}
         assert {"inc_signatures", "inc_exact_edges", "inc_lsh_edges",
                 "inc_phash_edges", "inc_components_contracted",
@@ -224,6 +258,11 @@ def test_run_incremental_matches_full_rebuild(spark, images):
             assert f"{st}+append" in lin, st
             assert lin[f"{st}+append"]["input_fp"].startswith("inc:")
 
+        # the maintenance fold rewrites components with one file per cb
+        maintain_warehouse(spark, cfg)
+        cb_files = files_per_part("components", "cb")
+        assert cb_files and set(cb_files.values()) == {1}, cb_files
+
         bad = DedupPipeline(spark, PipelineConfig(
             warehouse=os.path.join(td, "wh"), phash_radius=4))
         with pytest.raises(ValueError):
@@ -233,6 +272,43 @@ def test_run_incremental_matches_full_rebuild(spark, images):
         shutil.rmtree(os.path.join(td, "wh", "lsh_buckets"))
         with pytest.raises(ValueError, match="lsh_buckets"):
             DedupPipeline(spark, cfg).run_incremental(new)
+
+
+def _job_marker(sc, tag: str) -> int:
+    """Run one single-task job under its own job group → its job id."""
+    sc.setJobGroup(tag, tag)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    (job_id,) = sc.statusTracker().getJobIdsForGroup(tag)
+    return job_id
+
+
+# Spark jobs one run_incremental of the fixture's odd half launches onto a
+# warehouse built from its even half (local[8], 8 shuffle partitions): 125
+# before the append path opened each stage once and reclustered in one
+# fetch, 92 after; the ceiling is 92 + ~10%
+JOB_CEILING = 101
+
+
+def test_run_incremental_job_ceiling(spark, images):
+    """ROADMAP direction 2: a job-count ceiling on run_incremental. Job
+    ids are sequential across the application, so the ids of two marker
+    jobs bracketing the append count every job in between — including
+    those submitted from run_incremental's thread pools."""
+    parity = F.substring("image_id", -1, 1).cast("int") % 2
+    with tempfile.TemporaryDirectory() as td:
+        cfg = PipelineConfig(warehouse=os.path.join(td, "wh"))
+        DedupPipeline(spark, cfg).run(images.filter(parity == 0))
+        new = images.filter(parity == 1)
+        sc = spark.sparkContext
+        first = _job_marker(sc, "run_incremental_ceiling_start")
+        DedupPipeline(spark, cfg).run_incremental(new)
+        last = _job_marker(sc, "run_incremental_ceiling_end")
+    jobs = last - first - 1
+    assert jobs <= JOB_CEILING, jobs
 
 
 def test_incremental_components_append_writes_o_batch_bytes(spark):
