@@ -10,11 +10,13 @@ with cores).
 
 Fix: drive each branch from its own Python thread against the shared
 SparkSession. Spark's scheduler interleaves the resulting jobs, so one
-branch's shuffle barrier overlaps another branch's compute. On a real
-cluster the same effect comes from submitting the stage writes of an
-Iceberg pipeline concurrently; thread-per-branch is the local-mode
-equivalent (py4j and the DAG scheduler are thread-safe by design — this is
-the documented multi-job submission pattern, not a workaround).
+branch's shuffle barrier overlaps another branch's compute (py4j and the
+DAG scheduler are thread-safe by design — this is the documented multi-job
+submission pattern, not a workaround). The checkpointed product path does
+the same: ``DedupPipeline.run`` submits each stage family (build + stage
+writes) to one thread pool, and ``run_incremental`` its probe branches and
+append writes; this module is the in-memory variant the headline bench
+times.
 
 Each branch still ends in an eager localCheckpoint: the edge frames are
 consumed by connected components AND by metrics counts, and Spark 4's AQE

@@ -48,9 +48,10 @@ import hashlib
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from dupers_spark.operators import exact, minhash_lsh as ml, simhash as sh
 from dupers_spark.operators.components import (
@@ -71,6 +72,9 @@ from dupers_spark.operators.components import (
 # Legacy stages without metadata default to 64 — what they were built with.
 CB_PARTITIONS = 64
 _CB_CAP = 1 << 20
+# resolution of the hash-of-pair PSNR invariant sample (psnr_sample is
+# compared against pmod(xxhash64(a, b), _PSNR_SCALE) / _PSNR_SCALE)
+_PSNR_SCALE = 1 << 20
 
 
 def derive_cb_partitions(n_rows: int, target_rows: int = 2_000_000,
@@ -459,9 +463,13 @@ class DedupPipeline:
     def _write_stage(self, name: str, df: DataFrame,
                      partition_by: list[str] | None = None) -> DataFrame:
         t0 = time.time()
-        self.store.write(name, df, partition_by=partition_by)
+        # the row count rides on the write job itself: a read-back count()
+        # would cost a file listing plus a scan job
+        obs = Observation()
+        self.store.write(name, df.observe(obs, F.count(F.lit(1)).alias("n")),
+                         partition_by=partition_by)
+        rows = int(obs.get["n"])
         out = self.store.read(name)
-        rows = out.count()
         elapsed = time.time() - t0
         self.metrics.append(
             {"stage": name, "rows": rows, "seconds": round(elapsed, 3)}
@@ -736,47 +744,54 @@ class DedupPipeline:
                 "signatures", lambda: self._signature_frame(images, features)
             )
 
-        edge_frames: list[DataFrame] = []
+        # ---- the edge families are independent DAG branches over the
+        # signatures stage. Each runs its whole stage chain (build, write,
+        # marker) from its own pool thread, so one family's shuffle barrier
+        # overlaps another's compute — the multi-job submission pattern
+        # run_incremental's probe branches use. Markers stay per stage: a
+        # family that fails leaves every stage that completed (in any
+        # family) resumable. The pool closes before _run_locked returns or
+        # raises, so no stage write outlives run()'s _INC_PENDING hold.
+        def exact_family():
+            return self._stage(
+                "exact_edges",
+                lambda: exact.dup_edges(sigs.select("image_id", "sha256")))
 
-        exact_edges = self._stage(
-            "exact_edges",
-            lambda: exact.dup_edges(sigs.select("image_id", "sha256")),
-        )
-        edge_frames.append(exact_edges)
-
+        families = {"exact": exact_family}
         if self.cfg.use_captions:
             # the caption near-dup INDEX (one rep per distinct caption +
             # its minhash signature/bands, plus the kb-partitioned
             # band-bucket stage) is a stage family of its own so
             # run_incremental can probe and append to it without ever
             # re-signaturing the corpus
-            edge_frames.append(self._lsh_family(
+            families["lsh"] = lambda: self._lsh_family(
                 "", sigs.select("image_id", "caption"), self.cfg.lsh,
-                "image_id"))
+                "image_id")
 
         # media branches: decode → persisted token stage → the SAME LSH
         # family as captions (own prefix, media_lsh config). The decode is
         # the expensive part, so the token table is a stage of its own —
         # resumes and appends never re-decode the corpus.
+        def media_family(prefix: str, build_tokens):
+            tok = self._stage(f"{prefix}tokens", build_tokens)
+            return self._lsh_family(prefix, tok, self.cfg.media_lsh,
+                                    "media_id")
+
         if self.cfg.use_video:
             from dupers_spark.operators import video as vo
 
-            vtok = self._stage(
-                "video_tokens",
+            families["video"] = lambda: media_family(
+                "video_",
                 lambda: vo.video_token_table(videos, self.cfg.video_every_n))
-            edge_frames.append(self._lsh_family(
-                "video_", vtok, self.cfg.media_lsh, "media_id"))
         if self.cfg.use_audio:
             from dupers_spark.operators import audio as ao
 
-            atok = self._stage(
-                "audio_tokens",
+            families["audio"] = lambda: media_family(
+                "audio_",
                 lambda: ao.audio_token_table(audio, self.cfg.audio_win,
                                              self.cfg.audio_bands))
-            edge_frames.append(self._lsh_family(
-                "audio_", atok, self.cfg.media_lsh, "media_id"))
 
-        if self.cfg.use_phash:
+        def phash_family():
             pimg = sigs.select("image_id", "phash").filter(
                 F.col("phash").isNotNull())
 
@@ -810,49 +825,27 @@ class DedupPipeline:
                                      "rows": dropped.count(), "seconds": 0.0})
                 return star.unionByName(verified.select("a", "b"))
 
-            edge_frames.append(self._stage("phash_edges", build_phash))
+            return self._stage("phash_edges", build_phash)
 
-        all_edges = edge_frames[0]
-        for e in edge_frames[1:]:
-            all_edges = all_edges.unionByName(e)
+        if self.cfg.use_phash:
+            families["phash"] = phash_family
 
-        # total assignment covers every modality: image ids + the media
-        # corpora's ids (including undecodable payloads — they cluster as
-        # singletons rather than vanishing)
-        all_ids = sigs.select("image_id")
-        if self.cfg.use_video:
-            all_ids = all_ids.unionByName(
-                videos.select(F.col("media_id").alias("image_id")))
-        if self.cfg.use_audio:
-            all_ids = all_ids.unionByName(
-                audio.select(F.col("media_id").alias("image_id")))
-
-        # cb-partitioned (identity-partition layout): appends leave this
-        # BASE untouched and land in components_delta/_relabel instead;
-        # the cb layout is what maintain_warehouse's fold rewrites into.
-        # Modulus derived from the corpus size (the fingerprint already
-        # counted the rows — no extra job), recorded in column metadata.
-        cb_mod = derive_cb_partitions(self._fp_rows())
-        comps = self._stage(
-            "components",
-            lambda: with_cb(with_singletons(
-                connected_components(all_edges), all_ids
-            ), cb_mod),
-            partition_by=["cb"],
-        )
-        # a full (re)build supersedes any append-era delta/relabel stages —
-        # stale ones would relabel the fresh assignment with dead labels.
-        # (A resume with live delta stages cannot happen: appends rewrite
-        # every marker to the inc: namespace, which never matches run()'s
-        # image-frame fingerprint, so run() rebuilds whenever deltas exist.)
-        self.store.drop("components_delta")
-        self.store.drop("components_relabel")
-
-        if not self.cfg.fast and self.cfg.psnr_sample > 0:
+        def invariants_family(exact_fut):
+            # needs only exact_edges and the images, so its decode overlaps
+            # the connected-components loop on the calling thread
             from dupers_spark.operators import multimodal as mm
 
+            exact_edges = exact_fut.result()
+
             def build_invariants():
-                sampled = exact_edges.sample(self.cfg.psnr_sample, seed=42)
+                # a hash of the pair picks the sample: the same edges on
+                # every build, whatever the stage file's row order, and the
+                # same rows in both of the plan's evaluations of `sampled`
+                # (pair_psnr and the caption join); psnr_sample=1.0 keeps
+                # every edge
+                keep = (F.pmod(F.xxhash64("a", "b"), F.lit(_PSNR_SCALE))
+                        < F.lit(self.cfg.psnr_sample * _PSNR_SCALE))
+                sampled = exact_edges.filter(keep)
                 scored = mm.pair_psnr(sampled, images)
                 caps = images.select("image_id", "caption")
                 cap_pairs = (
@@ -865,7 +858,57 @@ class DedupPipeline:
                 )
                 return scored.join(cap_pairs, ["a", "b"], "left")
 
-            self._stage("invariants", build_invariants)
+            return self._stage("invariants", build_invariants)
+
+        with_invariants = not self.cfg.fast and self.cfg.psnr_sample > 0
+        with ThreadPoolExecutor(len(families) + with_invariants) as pool:
+            futs = {k: pool.submit(fn) for k, fn in families.items()}
+            if with_invariants:
+                inv_fut = pool.submit(invariants_family, futs["exact"])
+            edge_frames = [f.result() for f in futs.values()]
+
+            all_edges = edge_frames[0]
+            for e in edge_frames[1:]:
+                all_edges = all_edges.unionByName(e)
+
+            # total assignment covers every modality: image ids + the media
+            # corpora's ids (including undecodable payloads — they cluster
+            # as singletons rather than vanishing)
+            all_ids = sigs.select("image_id")
+            if self.cfg.use_video:
+                all_ids = all_ids.unionByName(
+                    videos.select(F.col("media_id").alias("image_id")))
+            if self.cfg.use_audio:
+                all_ids = all_ids.unionByName(
+                    audio.select(F.col("media_id").alias("image_id")))
+
+            # cb-partitioned (identity-partition layout): appends leave this
+            # BASE untouched and land in components_delta/_relabel instead;
+            # the cb layout is what maintain_warehouse's fold rewrites into.
+            # Modulus derived from the corpus size (the fingerprint already
+            # counted the rows — no extra job), recorded in column metadata.
+            # Spread by cb like every other partitioned write: one file per
+            # cb directory, written on every core (not one file per
+            # upstream task in each directory, which every lookup and
+            # append then scans).
+            cb_mod = derive_cb_partitions(self._fp_rows())
+            comps = self._stage(
+                "components",
+                lambda: spread_partitions(with_cb(with_singletons(
+                    connected_components(all_edges), all_ids
+                ), cb_mod), cb_mod, "cb"),
+                partition_by=["cb"],
+            )
+            # a full (re)build supersedes any append-era delta/relabel
+            # stages — stale ones would relabel the fresh assignment with
+            # dead labels. (A resume with live delta stages cannot happen:
+            # appends rewrite every marker to the inc: namespace, which
+            # never matches run()'s image-frame fingerprint, so run()
+            # rebuilds whenever deltas exist.)
+            self.store.drop("components_delta")
+            self.store.drop("components_relabel")
+            if with_invariants:
+                inv_fut.result()
 
         self._write_metrics()
         # clear the crashed-append sentinel ONLY if this run observed it at
@@ -1119,8 +1162,6 @@ class DedupPipeline:
                 metric("inc_phash_edges", n_ph, t0)
                 return ph_inc, ph_rep_rows, ph_block_rows, n_ph
 
-            from concurrent.futures import ThreadPoolExecutor
-
             futs: dict = {}
             with ThreadPoolExecutor(5) as pool:
                 futs["exact"] = pool.submit(exact_branch)
@@ -1326,8 +1367,6 @@ class DedupPipeline:
         batch's '+append' rows survive across processes — the audit trail
         the append path exists to provide. The two tables are independent
         directories, so their writes run concurrently."""
-        from concurrent.futures import ThreadPoolExecutor
-
         mdf = self.spark.createDataFrame(
             [
                 (m["stage"], int(m["rows"]), float(m["seconds"]), bool(m.get("resumed", False)))

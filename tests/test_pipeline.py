@@ -77,21 +77,58 @@ def test_normal_mode_decodes_and_verifies(spark, images):
         assert a == b
 
 
-def test_metrics_and_lineage_tables_written(spark, images):
+def test_psnr_invariant_sample_is_deterministic(spark, images):
+    """The PSNR invariant sample is a hash of the pair, so two builds of
+    one input keep the same edges whatever the exact_edges file layout or
+    the family threads' interleaving (the row-order sample it replaced
+    kept different edges in two builds of this fixture)."""
+    def invariants(wh):
+        cfg = PipelineConfig(warehouse=wh, fast=False, psnr_sample=0.3)
+        DedupPipeline(spark, cfg).run(images)
+        return sorted(tuple(r) for r in
+                      spark.read.parquet(os.path.join(wh, "invariants"))
+                      .collect())
+
     with tempfile.TemporaryDirectory() as td:
-        cfg = PipelineConfig(warehouse=os.path.join(td, "wh"))
+        first = invariants(os.path.join(td, "wh1"))
+        second = invariants(os.path.join(td, "wh2"))
+        n_edges = spark.read.parquet(
+            os.path.join(td, "wh1", "exact_edges")).count()
+    assert first == second
+    assert 0 < len(first) < n_edges
+
+
+def test_metrics_and_lineage_tables_written(spark, images):
+    """The metrics/lineage tables after run(): every written stage's row
+    count (observed on the write job, not counted back) equals the stage
+    at rest in both tables, and the components base holds exactly one
+    file per cb directory."""
+    import glob
+
+    with tempfile.TemporaryDirectory() as td:
+        wh = os.path.join(td, "wh")
+        cfg = PipelineConfig(warehouse=wh)
         p = DedupPipeline(spark, cfg)
         p.run(images)
-        m = spark.read.parquet(os.path.join(td, "wh", "metrics"))
+        m = spark.read.parquet(os.path.join(wh, "metrics"))
         assert {"stage", "rows", "seconds", "resumed"} <= set(m.columns)
         assert m.count() >= 4
-        lin = spark.read.parquet(os.path.join(td, "wh", "lineage"))
+        lin = spark.read.parquet(os.path.join(wh, "lineage"))
         rows = {r["stage"]: r for r in lin.collect()}
-        assert {"signatures", "exact_edges", "components"} <= set(rows)
-        for r in rows.values():
+        assert {"signatures", "exact_edges", "lsh_sigs", "lsh_buckets",
+                "lsh_edges", "phash_reps", "phash_blocks", "phash_edges",
+                "components"} <= set(rows)
+        metric_rows = {r["stage"]: r["rows"] for r in m.collect()}
+        for stage, r in rows.items():
             assert r["config_hash"] == cfg.config_hash()
             assert r["input_fp"] == p._input_fp
-            assert r["rows"] >= 0
+            at_rest = spark.read.parquet(os.path.join(wh, stage)).count()
+            assert r["rows"] == metric_rows[stage] == at_rest, stage
+
+        cb_dirs = glob.glob(os.path.join(wh, "components", "cb=*"))
+        assert cb_dirs
+        for d in cb_dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
 
 
 def test_fingerprint_full_detects_samelength_byte_edit(spark, images):
@@ -309,6 +346,75 @@ def test_run_incremental_job_ceiling(spark, images):
         last = _job_marker(sc, "run_incremental_ceiling_end")
     jobs = last - first - 1
     assert jobs <= JOB_CEILING, jobs
+
+
+# Spark jobs one fast-mode run() over the fixture launches (local[8], 8
+# shuffle partitions): 94 while every stage write was followed by a
+# read-back count(), 77 with the row count observed on the write; the
+# ceiling is 77 + ~10%
+RUN_JOB_CEILING = 85
+
+
+def test_run_job_ceiling(spark, images):
+    """ROADMAP direction 2: a job-count ceiling on the full build, counted
+    the same way as test_run_incremental_job_ceiling — the family threads'
+    jobs fall between the two marker jobs too."""
+    with tempfile.TemporaryDirectory() as td:
+        cfg = PipelineConfig(warehouse=os.path.join(td, "wh"))
+        sc = spark.sparkContext
+        first = _job_marker(sc, "run_ceiling_start")
+        DedupPipeline(spark, cfg).run(images)
+        last = _job_marker(sc, "run_ceiling_end")
+    jobs = last - first - 1
+    assert jobs <= RUN_JOB_CEILING, jobs
+
+
+def test_failing_family_leaves_completed_stages_resumable(
+        spark, images, monkeypatch):
+    """A family that raises mid-build: run() re-raises it only after every
+    other family has finished writing (no stage directory changes once
+    run() has returned) and releases _INC_PENDING; the next run() resumes
+    every stage that completed and ends with a fresh build's assignment."""
+    import glob
+    import time
+
+    from dupers_spark.plans import pipeline
+
+    def inventory(wh):
+        return sorted(
+            (os.path.relpath(f, wh), os.path.getmtime(f), os.path.getsize(f))
+            for f in glob.glob(os.path.join(wh, "**", "*"), recursive=True)
+            if os.path.isfile(f))
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected phash failure")
+
+    with tempfile.TemporaryDirectory() as td:
+        wh = os.path.join(td, "wh")
+        cfg = PipelineConfig(warehouse=wh)
+        with monkeypatch.context() as mp:
+            mp.setattr(pipeline.sh, "hamming_candidates", boom)
+            p1 = DedupPipeline(spark, cfg)
+            with pytest.raises(RuntimeError, match="injected phash failure"):
+                p1.run(images)
+        assert not os.path.exists(p1._pending())
+        after_raise = inventory(wh)
+        time.sleep(2.0)
+        assert inventory(wh) == after_raise
+        assert not os.path.exists(os.path.join(wh, "components"))
+
+        p2 = DedupPipeline(spark, cfg)
+        got = {(r["image_id"], r["component_id"])
+               for r in p2.run(images).collect()}
+        resumed = {m["stage"] for m in p2.metrics if m.get("resumed")}
+        assert resumed == {"signatures", "exact_edges", "lsh_sigs",
+                           "lsh_buckets", "lsh_edges", "phash_reps",
+                           "phash_blocks"}, resumed
+
+        fresh = DedupPipeline(spark, PipelineConfig(
+            warehouse=os.path.join(td, "wh_fresh"))).run(images)
+        want = {(r["image_id"], r["component_id"]) for r in fresh.collect()}
+    assert got == want
 
 
 def test_incremental_components_append_writes_o_batch_bytes(spark):
