@@ -94,13 +94,6 @@ def star_edges(df: DataFrame, grouped: DataFrame, id_col: str = "image_id",
     )
 
 
-def collapse_exact(df: DataFrame, id_col: str = "image_id",
-                   text_col: str = "caption") -> tuple[DataFrame, DataFrame]:
-    """→ (reps(rep_id, caption), star_edges(a=member, b=rep))."""
-    grouped = collapse_groups(df, id_col, text_col)
-    return grouped.select("rep_id", "caption"), star_edges(df, grouped, id_col, text_col)
-
-
 def signatures(reps: DataFrame, cfg: LSHConfig = LSHConfig(),
                keep: tuple[str, ...] = ()) -> DataFrame:
     """reps(rep_id, caption) → (rep_id, shingles, bands array<long>[, keep]).

@@ -41,14 +41,20 @@ def collapse_exact_sig(df: DataFrame, id_col: str = "image_id",
     """Identical 64-bit signatures collapse to one rep + star edges
     (member → rep via join-back on the sig key)."""
     grouped = collapse_sig_groups(df, id_col, sig_col)
-    reps = grouped.select("rep_id", "sig")
-    star = (
+    star = star_edges(df, grouped, id_col, sig_col)
+    return grouped.select("rep_id", "sig"), star
+
+
+def star_edges(df: DataFrame, grouped: DataFrame, id_col: str = "image_id",
+               sig_col: str = "phash") -> DataFrame:
+    """(member → rep) edges via join-back on the sig key; ``grouped`` is
+    any (rep_id, sig) rep frame (minhash_lsh.star_edges analogue)."""
+    return (
         df.select(F.col(id_col).alias("member"), F.col(sig_col).alias("sig"))
         .join(grouped, "sig")
         .filter(F.col("member") != F.col("rep_id"))
         .select(F.col("member").alias("a"), F.col("rep_id").alias("b"))
     )
-    return reps, star
 
 
 def sig_blocks(reps: DataFrame, radius: int = 3) -> DataFrame:
@@ -144,13 +150,7 @@ def incremental_hamming_edges(index_reps: DataFrame, new_images: DataFrame,
     grouped = collapse_sig_groups(new_images, id_col, sig_col) \
         .repartition(par).localCheckpoint()
     reps_new = grouped.select("rep_id", "sig")
-    star = (
-        new_images.select(F.col(id_col).alias("member"),
-                          F.col(sig_col).alias("sig"))
-        .join(grouped, "sig")
-        .filter(F.col("member") != F.col("rep_id"))
-        .select(F.col("member").alias("a"), F.col("rep_id").alias("b"))
-    )
+    star = star_edges(new_images, grouped, id_col, sig_col)
 
     if index_blocks is None:
         index_blocks = sig_blocks(index_reps, radius)
@@ -188,12 +188,7 @@ def phash_near_dup_edges(images: DataFrame, radius: int = 3,
     par = images.sparkSession.sparkContext.defaultParallelism * 2
     grouped = collapse_sig_groups(images, id_col, sig_col).repartition(par).localCheckpoint()
     reps = grouped.select("rep_id", "sig")
-    star = (
-        images.select(F.col(id_col).alias("member"), F.col(sig_col).alias("sig"))
-        .join(grouped, "sig")
-        .filter(F.col("member") != F.col("rep_id"))
-        .select(F.col("member").alias("a"), F.col("rep_id").alias("b"))
-    )
+    star = star_edges(images, grouped, id_col, sig_col)
     cands, dropped = hamming_candidates(reps, radius, max_bucket)
     verified = verify_hamming(cands, reps, radius)
     edges = star.unionByName(verified.select("a", "b"))

@@ -6,20 +6,23 @@ Iceberg would swap in transparently since every write goes through
 
   signatures   — exact sha256 + phash per image (zero-byte rows excluded)
   exact_edges  — byte-identical pair edges (star-collapsed)
-  lsh_sigs     — caption near-dup INDEX: rep per distinct caption + minhash
-                 signature/bands (probed and appended by run_incremental)
-  lsh_buckets  — the BAND-BUCKET index (band, key, rep_id, kb): the
-                 materialized posexplode of lsh_sigs, kb-partitioned
+  the near-dup index families — one row each in FAMILIES, from which
+  run() builds and run_incremental() probes, appends and audits them all:
+                 [token stage →] index → bucket index → edges
+      captions   lsh_sigs → lsh_buckets → lsh_edges
+      video      video_tokens → video_lsh_sigs → video_lsh_buckets →
+                 video_lsh_edges          (audio_* likewise)
+      perceptual phash_reps → phash_blocks → phash_edges
+    token stage  — decoded media (media_id, token string); never re-decoded
+    index stage  — rep per distinct key: caption/token string + MinHash
+                 signature/bands, or distinct 64-bit sig (Hamming)
+    bucket index — (band, key, rep_id[, sig], kb): the materialized
+                 band/pigeonhole-block explode of the index, kb-partitioned
                  (kb = key & 63 → Iceberg identity-partition layout).
-                 Append batches probe THIS stage — a skinny 3-column scan
-                 pruned to the touched kb partitions — instead of paying an
-                 O(|corpus|·bands) signature-stage re-explosion per batch
-  lsh_edges    — caption MinHash/LSH verified edges + collapse stars
-  phash_reps   — perceptual INDEX: rep per distinct 64-bit sig
-  phash_blocks — the pigeonhole block index for phash_reps (same role and
-                 layout as lsh_buckets, with the sig column for Hamming
-                 refinement)
-  phash_edges  — perceptual Hamming-ball verified edges + collapse stars
+                 Append batches probe THIS stage — a skinny scan pruned to
+                 the touched kb partitions — instead of paying an
+                 O(|corpus|·bands) index re-explosion per batch
+    edges        — verified bucket pairs + collapse stars
   components   — connected components over the union edge graph (the BASE
                  assignment, cb-partitioned). Appends never rewrite it:
   components_delta   — appended batch assignments (one append = one
@@ -44,10 +47,12 @@ ever recomputing the corpus.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 
@@ -170,6 +175,88 @@ class PipelineConfig:
             {**asdict(self), "lsh": asdict(self.lsh)}, sort_keys=True
         ).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
+
+
+def _video_tokens(cfg: PipelineConfig, videos: DataFrame) -> DataFrame:
+    from dupers_spark.operators import video as vo
+
+    return vo.video_token_table(videos, cfg.video_every_n)
+
+
+def _audio_tokens(cfg: PipelineConfig, audio: DataFrame) -> DataFrame:
+    from dupers_spark.operators import audio as ao
+
+    return ao.audio_token_table(audio, cfg.audio_win, cfg.audio_bands)
+
+
+@dataclass(frozen=True)
+class IndexFamily:
+    """One persisted-index family: its input frame → [token stage →]
+    index stage → kb-partitioned bucket stage → edge stage. run() builds
+    and run_incremental() probes, appends and audits every enabled row of
+    FAMILIES the same way; stage and metric names all come from here.
+    Operators are looked up through their module at call time (never
+    bound here), so patched/traced operators are the ones that run."""
+    flag: str           # the PipelineConfig switch enabling it
+    frame: str          # input: "images" (signatures), "videos", "audio"
+    source: Callable    # (cfg, input frame) → the (id, key) frame indexed
+    tokens: str | None  # stage persisting the decoded source, if any
+    index: str
+    buckets: str
+    edges: str
+    id_col: str = "image_id"
+    # the engine: the PipelineConfig LSHConfig field of a MinHash family
+    # over (id, caption); None = Hamming over (id, phash) at phash_radius
+    lsh: str | None = "lsh"
+
+    @property
+    def stem(self) -> str:
+        """Metric-name stem: lsh, video_lsh, audio_lsh, phash."""
+        return self.edges.removesuffix("_edges")
+
+    @property
+    def stages(self) -> tuple[str, ...]:
+        return tuple(s for s in (self.tokens, self.index, self.buckets,
+                                 self.edges) if s)
+
+    def lsh_config(self, cfg: PipelineConfig) -> ml.LSHConfig | None:
+        return getattr(cfg, self.lsh) if self.lsh else None
+
+    def bucket_rows(self, cfg: PipelineConfig,
+                    index: DataFrame) -> tuple[DataFrame, int]:
+        """(band, key, rep_id[, sig]) bucket rows of index-stage rows, and
+        how many each index row yields."""
+        lshcfg = self.lsh_config(cfg)
+        if lshcfg is None:
+            return (sh.sig_blocks(index, cfg.phash_radius),
+                    cfg.phash_radius + 1)
+        return ml.band_buckets(index, lshcfg), lshcfg.bands
+
+
+# Every near-dup index is persisted as a family of its own so
+# run_incremental can probe and append to it without re-signaturing the
+# corpus: caption MinHash over the signature frame (legacy unprefixed
+# stage names), the media-token families on the SAME engine with
+# media_lsh (the decode is the expensive part, so its tokens are a stage
+# — resumes and appends never re-decode), and the perceptual Hamming
+# family (its block stage carries sig for the Hamming-refinement kernel).
+# Order = build / probe / edge-union order.
+FAMILIES = (
+    IndexFamily("use_captions", "images",
+                lambda cfg, df: df.select("image_id", "caption"),
+                None, "lsh_sigs", "lsh_buckets", "lsh_edges"),
+    IndexFamily("use_video", "videos", _video_tokens, "video_tokens",
+                "video_lsh_sigs", "video_lsh_buckets", "video_lsh_edges",
+                "media_id", "media_lsh"),
+    IndexFamily("use_audio", "audio", _audio_tokens, "audio_tokens",
+                "audio_lsh_sigs", "audio_lsh_buckets", "audio_lsh_edges",
+                "media_id", "media_lsh"),
+    IndexFamily("use_phash", "images",
+                lambda cfg, df: df.select("image_id", "phash").filter(
+                    F.col("phash").isNotNull()),
+                None, "phash_reps", "phash_blocks", "phash_edges",
+                lsh=None),
+)
 
 
 def compact_stage(spark: SparkSession, path: str,
@@ -488,9 +575,6 @@ class DedupPipeline:
             fh.write(self._marker_value())
         return out
 
-    def _read_stage(self, name: str) -> DataFrame:
-        return self.store.read(name)
-
     def _effective_components(self, base: DataFrame | None = None,
                               ) -> DataFrame:
         """The served assignment: base ∪ delta with the relabel log applied
@@ -499,13 +583,13 @@ class DedupPipeline:
         the already-open ``components`` stage (read here when None)."""
         cols = ["image_id", "component_id", "cb"]
         if base is None:
-            base = self._read_stage("components")
+            base = self.store.read("components")
         eff = base.select(*cols)
         if self.store.exists("components_delta"):
             eff = eff.unionByName(
-                self._read_stage("components_delta").select(*cols))
+                self.store.read("components_delta").select(*cols))
         if self.store.exists("components_relabel"):
-            eff = apply_relabel(eff, self._read_stage("components_relabel"))
+            eff = apply_relabel(eff, self.store.read("components_relabel"))
         return eff
 
     def _stage(self, name: str, build,
@@ -514,38 +598,26 @@ class DedupPipeline:
         if self._is_done(name):
             self.metrics.append({"stage": name, "rows": -1, "seconds": 0.0,
                                  "resumed": True})
-            return self._read_stage(name)
+            return self.store.read(name)
         return self._write_stage(name, build(), partition_by=partition_by)
 
-    def _bucket_frame(self, kind: str, source: DataFrame,
-                      lshcfg: ml.LSHConfig | None = None,
+    def _bucket_frame(self, fam: IndexFamily, source: DataFrame,
                       index: DataFrame | None = None) -> DataFrame:
         """The ONE definition of the bucket-index layout — the full build
         and every per-batch append route here so they can never diverge:
-        band/block rows + kb partition column, hash-spread by kb over the
-        cores (spread_partitions) so every write lands exactly 1 file per
-        touched kb partition, written in parallel (appends included;
-        maintain_warehouse handles long-horizon file accretion).
-        kind '*lsh_buckets' covers the caption family AND the media-token
-        families (same banding, per-family LSH config).
+        the family's band/block rows + kb partition column, hash-spread by
+        kb over the cores (spread_partitions) so every write lands exactly
+        1 file per touched kb partition, written in parallel (appends
+        included; maintain_warehouse handles long-horizon file accretion).
 
         An append passes the already-open stage as ``index``: the kb
         modulus follows the stage at rest (batch rows must land in the
         partitions probes prune to). A fresh build derives it from the
         corpus size (derive_kb_partitions — 64 below ~128M bucket rows,
         scaling past that instead of the round-6 fixed constant)."""
-        if index is not None:
-            kb_mod = ml.kb_modulus(index)
-        else:
-            if kind.endswith("lsh_buckets"):
-                per_row = (lshcfg or self.cfg.lsh).bands
-            else:
-                per_row = self.cfg.phash_radius + 1
-            kb_mod = ml.derive_kb_partitions(self._fp_rows() * per_row)
-        if kind.endswith("lsh_buckets"):
-            rows = ml.band_buckets(source, lshcfg or self.cfg.lsh)
-        else:  # phash_blocks
-            rows = sh.sig_blocks(source, self.cfg.phash_radius)
+        rows, per_row = fam.bucket_rows(self.cfg, source)
+        kb_mod = (ml.kb_modulus(index) if index is not None else
+                  ml.derive_kb_partitions(self._fp_rows() * per_row))
         return spread_partitions(ml.with_kb(rows, kb_mod), kb_mod, "kb")
 
     def _fp_rows(self) -> int:
@@ -556,41 +628,68 @@ class DedupPipeline:
         except (ValueError, IndexError):
             return 0
 
-    def _lsh_family(self, prefix: str, tokens: DataFrame,
-                    lshcfg: ml.LSHConfig, id_col: str) -> DataFrame:
-        """Build the three-stage LSH index family over an (id, caption)
-        token frame → the family's edge stage. prefix '' is the caption
-        engine (legacy stage names); 'video_'/'audio_' are the media
-        branches — identical machinery, identical resume/append contract.
-        """
-        def build_sigs():
+    def _build_family(self, fam: IndexFamily, make_source) -> DataFrame:
+        """One family's full build → its edge stage: [token stage →] index
+        stage → bucket stage → star edges (members of an identical key →
+        its rep) ∪ verified bucket pairs, with the dropped-bucket count
+        recorded. ``make_source`` builds the family's (id, key) frame."""
+        src = (self._stage(fam.tokens, make_source) if fam.tokens
+               else make_source())
+        lshcfg = fam.lsh_config(self.cfg)
+        radius = self.cfg.phash_radius
+
+        def build_index():
+            if lshcfg is None:  # one rep per distinct 64-bit sig
+                return sh.collapse_sig_groups(src, fam.id_col) \
+                    .select("rep_id", "sig")
             # core-proportional repartition before the Arrow signature
             # kernel (AQE coalesces the tiny collapse shuffle and the
             # kernel would inherit ~4 tasks); eager checkpoint because
             # grouped feeds both the kernel and the token join-back
-            par = tokens.sparkSession.sparkContext.defaultParallelism * 2
-            grouped = ml.collapse_groups(tokens, id_col).repartition(par) \
+            par = src.sparkSession.sparkContext.defaultParallelism * 2
+            grouped = ml.collapse_groups(src, fam.id_col).repartition(par) \
                 .localCheckpoint()
             s = ml.signatures(grouped.select("rep_id", "caption"), lshcfg)
             return s.join(grouped, "rep_id")  # + caption (star join key)
 
-        sigs = self._stage(f"{prefix}lsh_sigs", build_sigs)
-
-        buckets = self._stage(
-            f"{prefix}lsh_buckets",
-            lambda: self._bucket_frame(f"{prefix}lsh_buckets", sigs, lshcfg),
-            partition_by=["kb"])
+        index = self._stage(fam.index, build_index)
+        buckets = self._stage(fam.buckets,
+                              lambda: self._bucket_frame(fam, index),
+                              partition_by=["kb"])
 
         def build_edges():
-            star = ml.star_edges(tokens, sigs.select("rep_id", "caption"),
-                                 id_col)
-            pairs, dropped = ml.candidate_pairs(buckets, lshcfg)
-            verified = ml.verify_pairs(pairs, sigs, lshcfg)
-            self.metrics.append({"stage": f"{prefix}lsh_dropped_buckets",
+            if lshcfg is None:
+                star = sh.star_edges(src, index, fam.id_col)
+                pairs, dropped = sh.hamming_candidates(index, radius,
+                                                       blocks=buckets)
+                verified = sh.verify_hamming(pairs, index, radius)
+            else:
+                star = ml.star_edges(src, index.select("rep_id", "caption"),
+                                     fam.id_col)
+                pairs, dropped = ml.candidate_pairs(buckets, lshcfg)
+                verified = ml.verify_pairs(pairs, index, lshcfg)
+            self.metrics.append({"stage": f"{fam.stem}_dropped_buckets",
                                  "rows": dropped.count(), "seconds": 0.0})
             return star.unionByName(verified.select("a", "b"))
 
-        return self._stage(f"{prefix}lsh_edges", build_edges)
+        return self._stage(fam.edges, build_edges)
+
+    def _families(self, frames: dict) -> dict:
+        """The enabled FAMILIES that have an input in ``frames`` (keyed by
+        IndexFamily.frame) → a thunk building each one's source frame."""
+        return {f: functools.partial(f.source, self.cfg, frames[f.frame])
+                for f in FAMILIES
+                if getattr(self.cfg, f.flag) and frames[f.frame] is not None}
+
+    @staticmethod
+    def _with_media_ids(ids: DataFrame, fams, frames: dict) -> DataFrame:
+        """``ids`` ∪ every media family's input ids (undecodable payloads
+        included — they cluster as singletons rather than vanishing)."""
+        for f in fams:
+            if f.frame != "images":
+                ids = ids.unionByName(frames[f.frame].select(
+                    F.col(f.id_col).alias("image_id")))
+        return ids
 
     def _signature_frame(self, images: DataFrame,
                          features: DataFrame | None = None) -> DataFrame:
@@ -744,8 +843,9 @@ class DedupPipeline:
                 "signatures", lambda: self._signature_frame(images, features)
             )
 
-        # ---- the edge families are independent DAG branches over the
-        # signatures stage. Each runs its whole stage chain (build, write,
+        # ---- the edge families — exact plus every enabled FAMILIES row —
+        # are independent DAG branches over the signatures stage (and the
+        # media corpora). Each runs its whole stage chain (build, write,
         # marker) from its own pool thread, so one family's shuffle barrier
         # overlaps another's compute — the multi-job submission pattern
         # run_incremental's probe branches use. Markers stay per stage: a
@@ -757,78 +857,12 @@ class DedupPipeline:
                 "exact_edges",
                 lambda: exact.dup_edges(sigs.select("image_id", "sha256")))
 
+        frames = {"images": sigs, "videos": videos, "audio": audio}
+        fams = self._families(frames)
         families = {"exact": exact_family}
-        if self.cfg.use_captions:
-            # the caption near-dup INDEX (one rep per distinct caption +
-            # its minhash signature/bands, plus the kb-partitioned
-            # band-bucket stage) is a stage family of its own so
-            # run_incremental can probe and append to it without ever
-            # re-signaturing the corpus
-            families["lsh"] = lambda: self._lsh_family(
-                "", sigs.select("image_id", "caption"), self.cfg.lsh,
-                "image_id")
-
-        # media branches: decode → persisted token stage → the SAME LSH
-        # family as captions (own prefix, media_lsh config). The decode is
-        # the expensive part, so the token table is a stage of its own —
-        # resumes and appends never re-decode the corpus.
-        def media_family(prefix: str, build_tokens):
-            tok = self._stage(f"{prefix}tokens", build_tokens)
-            return self._lsh_family(prefix, tok, self.cfg.media_lsh,
-                                    "media_id")
-
-        if self.cfg.use_video:
-            from dupers_spark.operators import video as vo
-
-            families["video"] = lambda: media_family(
-                "video_",
-                lambda: vo.video_token_table(videos, self.cfg.video_every_n))
-        if self.cfg.use_audio:
-            from dupers_spark.operators import audio as ao
-
-            families["audio"] = lambda: media_family(
-                "audio_",
-                lambda: ao.audio_token_table(audio, self.cfg.audio_win,
-                                             self.cfg.audio_bands))
-
-        def phash_family():
-            pimg = sigs.select("image_id", "phash").filter(
-                F.col("phash").isNotNull())
-
-            # perceptual index stage: one rep per distinct 64-bit sig
-            phash_reps = self._stage(
-                "phash_reps",
-                lambda: sh.collapse_sig_groups(pimg).select("rep_id", "sig"),
-            )
-
-            # pigeonhole block index at rest (lsh_buckets analogue; carries
-            # sig so the Hamming-refinement kernel works on the probe path)
-            phash_blocks = self._stage(
-                "phash_blocks",
-                lambda: self._bucket_frame("phash_blocks", phash_reps),
-                partition_by=["kb"])
-
-            def build_phash():
-                star = (
-                    pimg.select(F.col("image_id").alias("member"),
-                                F.col("phash").alias("sig"))
-                    .join(phash_reps, "sig")
-                    .filter(F.col("member") != F.col("rep_id"))
-                    .select(F.col("member").alias("a"),
-                            F.col("rep_id").alias("b"))
-                )
-                cands, dropped = sh.hamming_candidates(
-                    phash_reps, self.cfg.phash_radius, blocks=phash_blocks)
-                verified = sh.verify_hamming(cands, phash_reps,
-                                             self.cfg.phash_radius)
-                self.metrics.append({"stage": "phash_dropped_buckets",
-                                     "rows": dropped.count(), "seconds": 0.0})
-                return star.unionByName(verified.select("a", "b"))
-
-            return self._stage("phash_edges", build_phash)
-
-        if self.cfg.use_phash:
-            families["phash"] = phash_family
+        for fam, make_source in fams.items():
+            families[fam.stem] = functools.partial(self._build_family, fam,
+                                                   make_source)
 
         def invariants_family(exact_fut):
             # needs only exact_edges and the images, so its decode overlaps
@@ -871,16 +905,9 @@ class DedupPipeline:
             for e in edge_frames[1:]:
                 all_edges = all_edges.unionByName(e)
 
-            # total assignment covers every modality: image ids + the media
-            # corpora's ids (including undecodable payloads — they cluster
-            # as singletons rather than vanishing)
-            all_ids = sigs.select("image_id")
-            if self.cfg.use_video:
-                all_ids = all_ids.unionByName(
-                    videos.select(F.col("media_id").alias("image_id")))
-            if self.cfg.use_audio:
-                all_ids = all_ids.unionByName(
-                    audio.select(F.col("media_id").alias("image_id")))
+            # total assignment covers every modality
+            all_ids = self._with_media_ids(sigs.select("image_id"), fams,
+                                           frames)
 
             # cb-partitioned (identity-partition layout): appends leave this
             # BASE untouched and land in components_delta/_relabel instead;
@@ -935,15 +962,16 @@ class DedupPipeline:
           * exact: within-batch star edges + batch digests broadcast-probed
             against the signatures stage (scan + broadcast semi-join, no
             corpus shuffle)
-          * captions / phash: the operators' incremental probes against
-            the persisted ``lsh_buckets`` / ``phash_blocks`` BUCKET stages
-            (skinny precomputed band/block rows, kb-partition-pruned — the
-            signature stages are never re-exploded per batch); new reps
-            append to sigs/reps AND bucket stages alike. A batch caption
-            (or sig) identical to an indexed one adds a second rep for
-            that key — the verified sim-1.0 / dist-0 edge keeps the
-            cluster correct, and the index grows with batches, not with
-            the corpus.
+          * every enabled FAMILIES row with input in this batch (captions,
+            video/audio tokens, phash): the operator's incremental probe
+            against the family's persisted BUCKET stage (skinny
+            precomputed band/block rows, kb-partition-pruned — the index
+            stages are never re-exploded per batch); new reps append to
+            the index AND bucket stages alike (media tokens to the token
+            stage too). A batch key identical to an indexed one adds a
+            second rep for that key — the verified sim-1.0 / dist-0 edge
+            keeps the cluster correct, and the index grows with batches,
+            not with the corpus.
           * components: contracted-graph recluster
             (components.incremental_components_delta) — touched old
             components collapse to their labels, CC runs over the O(batch)
@@ -968,17 +996,9 @@ class DedupPipeline:
         """
         self._require_media(new_videos, new_audio,
                             require_when_enabled=False)
-        needed = ["signatures", "exact_edges", "components"]
-        if self.cfg.use_captions:
-            needed += ["lsh_sigs", "lsh_buckets", "lsh_edges"]
-        if self.cfg.use_phash:
-            needed += ["phash_reps", "phash_blocks", "phash_edges"]
-        if self.cfg.use_video:
-            needed += ["video_tokens", "video_lsh_sigs", "video_lsh_edges",
-                       "video_lsh_buckets"]
-        if self.cfg.use_audio:
-            needed += ["audio_tokens", "audio_lsh_sigs", "audio_lsh_edges",
-                       "audio_lsh_buckets"]
+        needed = ["signatures", "exact_edges", "components"] + [
+            st for f in FAMILIES if getattr(self.cfg, f.flag)
+            for st in f.stages]
         optional = [s for s in ("components_delta", "components_relabel")
                     if self.store.exists(s)]
         for name in needed + optional:
@@ -1063,10 +1083,10 @@ class DedupPipeline:
             bfp = bsigs.agg(F.count("*").alias("n"), fp_expr).collect()[0]
             n_batch_rows = int(bfp["n"])
             metric("inc_signatures", n_batch_rows, t0)
-            old_sigs = self._read_stage("signatures")
+            old_sigs = self.store.read("signatures")
 
-            # ---- the probe branches (exact / captions / media / phash)
-            # are independent DAG branches, each ending in an eager
+            # ---- the probe branches (exact + one per FAMILIES row with
+            # input) are independent DAG branches, each ending in an eager
             # checkpoint — run them from a small thread pool so one
             # branch's shuffle barrier overlaps another's compute (the
             # documented multi-job submission pattern, same as
@@ -1089,100 +1109,53 @@ class DedupPipeline:
                 metric("inc_exact_edges", n_ex, t0)
                 return exact_inc, n_ex
 
-            def lsh_branch():
+            def probe(fam: IndexFamily, make_source):
                 t0 = time.time()
-                lsh_sigs = self._read_stage("lsh_sigs")
-                lsh_buckets = self._read_stage("lsh_buckets")
-                caps_new = bsigs.select("image_id", "caption")
-                # probe the PERSISTED band-bucket stage (kb-pruned skinny
-                # scan) — the signature stage is only touched for verify
-                # participants
-                lsh_inc, _ver, dropped, sigs_new = \
-                    ml.incremental_near_dup_edges(
-                        lsh_sigs.select("rep_id", "shingles", "bands"),
-                        caps_new, self.cfg.lsh, index_buckets=lsh_buckets)
-                lsh_inc = lsh_inc.localCheckpoint()
-                # sigs_new is checkpointed and carries caption — the
-                # append rows are pure projections, no extra jobs
-                lsh_sig_rows = sigs_new.select(*lsh_sigs.columns)
-                lsh_bucket_rows = self._bucket_frame("lsh_buckets", sigs_new,
-                                                    index=lsh_buckets)
-                n_lsh = lsh_inc.count()
-                self.metrics.append({"stage": "inc_lsh_dropped_buckets",
-                                     "rows": dropped.count(),
-                                     "seconds": 0.0})
-                metric("inc_lsh_edges", n_lsh, t0)
-                return lsh_inc, lsh_sig_rows, lsh_bucket_rows, n_lsh
-
-            def media_branch(prefix: str, batch_tokens: DataFrame):
-                t0m = time.time()
-                # decode/checkpoint INSIDE the branch thread so the token
-                # decode overlaps the other branches instead of serializing
-                # at submit time
-                batch_tokens = batch_tokens.localCheckpoint()
-                fam_sigs = self._read_stage(f"{prefix}lsh_sigs")
-                fam_buckets = self._read_stage(f"{prefix}lsh_buckets")
-                m_inc, _mv, m_drop, m_sigs_new = \
-                    ml.incremental_near_dup_edges(
-                        fam_sigs.select("rep_id", "shingles", "bands"),
-                        batch_tokens, self.cfg.media_lsh, id_col="media_id",
-                        index_buckets=fam_buckets)
-                m_inc = m_inc.localCheckpoint()
-                sig_rows = m_sigs_new.select(*fam_sigs.columns)
-                bucket_rows = self._bucket_frame(
-                    f"{prefix}lsh_buckets", m_sigs_new, self.cfg.media_lsh,
-                    index=fam_buckets)
-                n_m = m_inc.count()
+                src = make_source()
+                if fam.tokens:
+                    # decode/checkpoint INSIDE the branch thread so the
+                    # token decode overlaps the other branches
+                    src = src.localCheckpoint()
+                index = self.store.read(fam.index)
+                buckets = self.store.read(fam.buckets)
+                lshcfg = fam.lsh_config(self.cfg)
+                # probe the PERSISTED bucket stage (kb-pruned skinny scan)
+                # — the index stage is only touched for verify participants
+                if lshcfg is None:
+                    edges, _ver, dropped, index_new = \
+                        sh.incremental_hamming_edges(
+                            index, src, self.cfg.phash_radius,
+                            id_col=fam.id_col, index_blocks=buckets)
+                else:
+                    edges, _ver, dropped, index_new = \
+                        ml.incremental_near_dup_edges(
+                            index.select("rep_id", "shingles", "bands"),
+                            src, lshcfg, id_col=fam.id_col,
+                            index_buckets=buckets)
+                edges = edges.localCheckpoint()
+                # index_new is a checkpoint of the probe (carrying caption
+                # on the MinHash path) — the append rows are pure
+                # projections, no extra jobs
+                rows = {fam.tokens: src} if fam.tokens else {}
+                rows[fam.index] = index_new.select(*index.columns)
+                rows[fam.buckets] = self._bucket_frame(fam, index_new,
+                                                       index=buckets)
+                rows[fam.edges] = edges
+                n = edges.count()
                 self.metrics.append(
-                    {"stage": f"inc_{prefix}lsh_dropped_buckets",
-                     "rows": m_drop.count(), "seconds": 0.0})
-                metric(f"inc_{prefix}lsh_edges", n_m, t0m)
-                return prefix, batch_tokens, sig_rows, bucket_rows, m_inc, n_m
+                    {"stage": f"inc_{fam.stem}_dropped_buckets",
+                     "rows": dropped.count(), "seconds": 0.0})
+                metric(f"inc_{fam.stem}_edges", n, t0)
+                return rows, n
 
-            def phash_branch():
-                t0 = time.time()
-                reps_stage = self._read_stage("phash_reps")
-                blocks_stage = self._read_stage("phash_blocks")
-                pimg_new = bsigs.select("image_id", "phash").filter(
-                    F.col("phash").isNotNull())
-                ph_inc, _ver, dropped_p, reps_new = \
-                    sh.incremental_hamming_edges(
-                        reps_stage, pimg_new, self.cfg.phash_radius,
-                        index_blocks=blocks_stage)
-                ph_inc = ph_inc.localCheckpoint()
-                # reps_new is a projection of the probe's checkpointed
-                # collapse frame — append rows need no extra jobs
-                ph_rep_rows = reps_new.select("rep_id", "sig")
-                ph_block_rows = self._bucket_frame("phash_blocks", reps_new,
-                                                  index=blocks_stage)
-                n_ph = ph_inc.count()
-                self.metrics.append({"stage": "inc_phash_dropped_buckets",
-                                     "rows": dropped_p.count(),
-                                     "seconds": 0.0})
-                metric("inc_phash_edges", n_ph, t0)
-                return ph_inc, ph_rep_rows, ph_block_rows, n_ph
-
+            fams = self._families({"images": bsigs, "videos": new_videos,
+                                   "audio": new_audio})
             futs: dict = {}
             with ThreadPoolExecutor(5) as pool:
                 futs["exact"] = pool.submit(exact_branch)
-                if self.cfg.use_captions:
-                    futs["lsh"] = pool.submit(lsh_branch)
-                if self.cfg.use_video and new_videos is not None:
-                    from dupers_spark.operators import video as vo
-
-                    futs["video"] = pool.submit(
-                        media_branch, "video_", vo.video_token_table(
-                            new_videos, self.cfg.video_every_n))
-                if self.cfg.use_audio and new_audio is not None:
-                    from dupers_spark.operators import audio as ao
-
-                    futs["audio"] = pool.submit(
-                        media_branch, "audio_", ao.audio_token_table(
-                            new_audio, self.cfg.audio_win,
-                            self.cfg.audio_bands))
-                if self.cfg.use_phash:
-                    futs["phash"] = pool.submit(phash_branch)
-                futs["base"] = pool.submit(self._read_stage, "components")
+                for fam, make_source in fams.items():
+                    futs[fam] = pool.submit(probe, fam, make_source)
+                futs["base"] = pool.submit(self.store.read, "components")
                 if not prev_fp.startswith("inc:"):
                     # first append after a full run(): its marker carries
                     # the image-frame fp, so seed the inc chain from the
@@ -1193,20 +1166,10 @@ class DedupPipeline:
                                              fp_expr).collect()[0])
                 results = {k: f.result() for k, f in futs.items()}
 
-            new_edge_frames: list[DataFrame] = []
             exact_inc, n_ex = results["exact"]
-            new_edge_frames.append(exact_inc)
-            if self.cfg.use_captions:
-                lsh_inc, lsh_sig_rows, lsh_bucket_rows, n_lsh = \
-                    results["lsh"]
-                new_edge_frames.append(lsh_inc)
-            media_appends = [results[k] for k in ("video", "audio")
-                             if k in results]
-            for rec in media_appends:
-                new_edge_frames.append(rec[4])
-            if self.cfg.use_phash:
-                ph_inc, ph_rep_rows, ph_block_rows, n_ph = results["phash"]
-                new_edge_frames.append(ph_inc)
+            probes = {fam: results[fam] for fam in fams}  # (rows, n)
+            new_edge_frames = [exact_inc] + [
+                rows[fam.edges] for fam, (rows, _n) in probes.items()]
             if prev_fp.startswith("inc:"):
                 _, n0, h0 = prev_fp.split(":")
                 n_old, h_old = int(n0), int(h0, 16)
@@ -1233,13 +1196,9 @@ class DedupPipeline:
             new_edges_all = new_edge_frames[0]
             for e in new_edge_frames[1:]:
                 new_edges_all = new_edges_all.unionByName(e)
-            batch_ids = bsigs.select("image_id")
-            if self.cfg.use_video and new_videos is not None:
-                batch_ids = batch_ids.unionByName(
-                    new_videos.select(F.col("media_id").alias("image_id")))
-            if self.cfg.use_audio and new_audio is not None:
-                batch_ids = batch_ids.unionByName(
-                    new_audio.select(F.col("media_id").alias("image_id")))
+            batch_ids = self._with_media_ids(
+                bsigs.select("image_id"), fams,
+                {"videos": new_videos, "audio": new_audio})
             relabel, new_assign, n_relabel = incremental_components_delta(
                 old_assign.select("image_id", "component_id"),
                 new_edges_all, batch_ids)
@@ -1250,7 +1209,7 @@ class DedupPipeline:
                 # compose: stored labels that previously mapped to a label
                 # the batch just merged away follow it to the new label, so
                 # the log STAYS flat (one broadcast hop at read time)
-                log = self._read_stage("components_relabel")
+                log = self.store.read("components_relabel")
                 log = log.join(
                     F.broadcast(relabel),
                     log["new_lbl"] == relabel["old_lbl"], "left",
@@ -1283,20 +1242,9 @@ class DedupPipeline:
         # long-horizon accretion
         n_delta_files = max(1, n_batch_rows // 1_000_000 + 1)
         writes: list[tuple] = [("exact_edges", exact_inc, None)]
-        if self.cfg.use_captions:
-            writes += [("lsh_sigs", lsh_sig_rows, None),
-                       ("lsh_buckets", lsh_bucket_rows, ["kb"]),
-                       ("lsh_edges", lsh_inc, None)]
-        if self.cfg.use_phash:
-            writes += [("phash_reps", ph_rep_rows, None),
-                       ("phash_blocks", ph_block_rows, ["kb"]),
-                       ("phash_edges", ph_inc, None)]
-        for prefix, tok_rows, sig_rows, bucket_rows, m_inc, n_m \
-                in media_appends:
-            writes += [(f"{prefix}tokens", tok_rows, None),
-                       (f"{prefix}lsh_sigs", sig_rows, None),
-                       (f"{prefix}lsh_buckets", bucket_rows, ["kb"]),
-                       (f"{prefix}lsh_edges", m_inc, None)]
+        for fam, (rows, _n) in probes.items():
+            writes += [(st, df, ["kb"] if st == fam.buckets else None)
+                       for st, df in rows.items()]
         writes += [("signatures", bsigs, None),
                    ("components_delta",
                     new_assign.select("image_id", "component_id", "cb")
@@ -1316,19 +1264,9 @@ class DedupPipeline:
                     new_log.select("old_lbl", "new_lbl"))
             took = {name: f.result() for name, f in wfuts.items()}
         lineage_append("exact_edges", n_ex)
-        if self.cfg.use_captions:
-            for st in ("lsh_sigs", "lsh_buckets"):
-                lineage_append(st)
-            lineage_append("lsh_edges", n_lsh)
-        if self.cfg.use_phash:
-            for st in ("phash_reps", "phash_blocks"):
-                lineage_append(st)
-            lineage_append("phash_edges", n_ph)
-        for prefix, _t, _s, _b, _m, n_m in media_appends:
-            for st in (f"{prefix}tokens", f"{prefix}lsh_sigs",
-                       f"{prefix}lsh_buckets"):
-                lineage_append(st)
-            lineage_append(f"{prefix}lsh_edges", n_m)
+        for fam, (rows, n) in probes.items():
+            for st in rows:
+                lineage_append(st, n if st == fam.edges else -1)
         lineage_append("signatures")
         # components: O(batch) delta append + O(merged) relabel-log rewrite,
         # concurrent with each other — seconds is the slower of the two

@@ -369,22 +369,25 @@ def test_run_job_ceiling(spark, images):
     assert jobs <= RUN_JOB_CEILING, jobs
 
 
+def _file_inventory(wh):
+    """(relative path, mtime, size) of every file under ``wh``."""
+    import glob
+
+    return sorted(
+        (os.path.relpath(f, wh), os.path.getmtime(f), os.path.getsize(f))
+        for f in glob.glob(os.path.join(wh, "**", "*"), recursive=True)
+        if os.path.isfile(f))
+
+
 def test_failing_family_leaves_completed_stages_resumable(
         spark, images, monkeypatch):
     """A family that raises mid-build: run() re-raises it only after every
     other family has finished writing (no stage directory changes once
     run() has returned) and releases _INC_PENDING; the next run() resumes
     every stage that completed and ends with a fresh build's assignment."""
-    import glob
     import time
 
     from dupers_spark.plans import pipeline
-
-    def inventory(wh):
-        return sorted(
-            (os.path.relpath(f, wh), os.path.getmtime(f), os.path.getsize(f))
-            for f in glob.glob(os.path.join(wh, "**", "*"), recursive=True)
-            if os.path.isfile(f))
 
     def boom(*args, **kwargs):
         raise RuntimeError("injected phash failure")
@@ -398,9 +401,9 @@ def test_failing_family_leaves_completed_stages_resumable(
             with pytest.raises(RuntimeError, match="injected phash failure"):
                 p1.run(images)
         assert not os.path.exists(p1._pending())
-        after_raise = inventory(wh)
+        after_raise = _file_inventory(wh)
         time.sleep(2.0)
-        assert inventory(wh) == after_raise
+        assert _file_inventory(wh) == after_raise
         assert not os.path.exists(os.path.join(wh, "components"))
 
         p2 = DedupPipeline(spark, cfg)
@@ -411,6 +414,41 @@ def test_failing_family_leaves_completed_stages_resumable(
                            "lsh_buckets", "lsh_edges", "phash_reps",
                            "phash_blocks"}, resumed
 
+        fresh = DedupPipeline(spark, PipelineConfig(
+            warehouse=os.path.join(td, "wh_fresh"))).run(images)
+        want = {(r["image_id"], r["component_id"]) for r in fresh.collect()}
+    assert got == want
+
+
+def test_run_incremental_probe_failure_leaves_warehouse_untouched(
+        spark, images, monkeypatch):
+    """A family probe that raises — the perceptual one here, patched on
+    its operator module, so the pipeline must look operators up at call
+    time: run_incremental re-raises it, nothing under the warehouse has
+    changed (the probe phase appends nothing), _INC_PENDING is released,
+    and the next unpatched append ends with a full rebuild's assignment."""
+    from dupers_spark.plans import pipeline
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected probe failure")
+
+    parity = F.substring("image_id", -1, 1).cast("int") % 2
+    old, new = images.filter(parity == 0), images.filter(parity == 1)
+    with tempfile.TemporaryDirectory() as td:
+        wh = os.path.join(td, "wh")
+        cfg = PipelineConfig(warehouse=wh)
+        DedupPipeline(spark, cfg).run(old)
+        before = _file_inventory(wh)
+        with monkeypatch.context() as mp:
+            mp.setattr(pipeline.sh, "incremental_hamming_edges", boom)
+            p1 = DedupPipeline(spark, cfg)
+            with pytest.raises(RuntimeError, match="injected probe failure"):
+                p1.run_incremental(new)
+        assert not os.path.exists(p1._pending())
+        assert _file_inventory(wh) == before
+
+        got = {(r["image_id"], r["component_id"]) for r in
+               DedupPipeline(spark, cfg).run_incremental(new).collect()}
         fresh = DedupPipeline(spark, PipelineConfig(
             warehouse=os.path.join(td, "wh_fresh"))).run(images)
         want = {(r["image_id"], r["component_id"]) for r in fresh.collect()}
@@ -568,9 +606,9 @@ def test_mixed_multimodal_pipeline_incremental_matches_rebuild(spark):
     with tempfile.TemporaryDirectory() as td:
         cfg = PipelineConfig(warehouse=os.path.join(td, "wh"),
                              use_video=True, use_audio=True, video_every_n=1)
-        DedupPipeline(spark, cfg).run(
-            images.filter(par_i == 0), videos.filter(par_m == 0),
-            audio.filter(par_m == 0))
+        p1 = DedupPipeline(spark, cfg)
+        p1.run(images.filter(par_i == 0), videos.filter(par_m == 0),
+               audio.filter(par_m == 0))
         tok_before = {f: os.path.getmtime(f) for f in glob.glob(
             os.path.join(td, "wh", "video_tokens", "*.parquet"))}
         p2 = DedupPipeline(spark, cfg)
@@ -578,6 +616,13 @@ def test_mixed_multimodal_pipeline_incremental_matches_rebuild(spark):
             images.filter(par_i == 1), videos.filter(par_m == 1),
             audio.filter(par_m == 1))
         got = {(r["image_id"], r["component_id"]) for r in comps.collect()}
+        # every family records its metrics under its own stage names
+        stems = ("lsh", "video_lsh", "audio_lsh", "phash")
+        assert {f"{s}_dropped_buckets" for s in stems} <= \
+            {m["stage"] for m in p1.metrics}
+        assert {f"inc_{s}_{m}" for s in stems
+                for m in ("edges", "dropped_buckets")} <= \
+            {m["stage"] for m in p2.metrics}
 
         cfg_full = PipelineConfig(warehouse=os.path.join(td, "wh_full"),
                                   use_video=True, use_audio=True,
